@@ -12,7 +12,11 @@ Every field here is CONSUMED somewhere (no dead knobs):
 - verbose      → operators/rsb.py per-cut progress prints
 - rsb_*        → operators/fiedler.py / rsb.py
 - spmv_impl    → operators/fiedler.py physical SpMV strategy
-- salt_degree_threshold   → operators/pagerank.py salted hub aggregation
+- salt_degree_threshold   → functions/loop.py: the SpMV loop driver keeps
+               AQE on only past this max degree (every ported kernel);
+               pagerank's salted hub aggregation; fiedler's loop AQE gate
+- loop_rows_per_task       → functions/loop.py (via session.loop_partitions):
+               loop parallelism of every ported kernel; fiedler's Lanczos loop
 - broadcast_threshold_rows / broadcast_threshold_mb
                → operators/similarity.py query-side broadcast gate
 - group_scalar_broadcast_threshold
@@ -67,7 +71,7 @@ class EngineOptions:
     # (shuffle parallelism is a SESSION concern — get_spark(shuffle_partitions=…)
     # — not an engine option: kernels read the live session conf so one
     # setting governs every plan)
-    salt_degree_threshold: int = 100_000  # hub salting in pagerank above this
+    salt_degree_threshold: int = 100_000  # hub degree: loop AQE gate, pagerank salting
     broadcast_threshold_rows: int = 1_000_000  # similarity query-side broadcast cap
     broadcast_threshold_mb: int = 256  # …and its BYTE cap: rows alone misprice
                                        # wide embeddings (1M × 1024-dim doubles

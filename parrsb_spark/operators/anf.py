@@ -42,6 +42,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from parrsb_spark.functions.hashing import HASH_SALT_A, HASH_SALT_B, MOD_P, MOD_X
+from parrsb_spark.functions.loop import spmv_loop
 from parrsb_spark.functions.spmv import symmetrize
 from parrsb_spark.sources.edges import vertices_from_edges
 
@@ -73,6 +74,12 @@ def _lzb_sql(mask_expr: str) -> str:
     return f"bit_count((((-({mask_expr}) - 1) & (({mask_expr}) + 1))) - 1)"
 
 
+def _fm_masks(g: DataFrame, cols: list[str]) -> DataFrame:
+    """(vid, s0..s{k-1}) — every vertex's own FM bit per sketch."""
+    masks = [F.expr(_fm_mask_sql("vid", k)).alias(c) for k, c in enumerate(cols)]
+    return vertices_from_edges(g).select("vid", *masks)
+
+
 def anf_masks(
     edges: DataFrame,
     n_hops: int = 6,
@@ -92,31 +99,24 @@ def anf_masks(
     are no-ops (OR is idempotent), so the fixed count equals the fixed
     point for any graph with diameter ≤ n_hops — the contract the
     unrolled SQL oracle replays."""
-    spark = edges.sparkSession
-    n_shuffle = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    g = (edges if directed else symmetrize(edges)).repartition(n_shuffle, "src").cache()
     cols = [f"s{k}" for k in range(n_sketches)]
-    masks = vertices_from_edges(g).select(
-        "vid", *[F.expr(_fm_mask_sql("vid", k)).alias(c) for k, c in enumerate(cols)]
-    ).localCheckpoint(eager=True)
-    for _ in range(n_hops):
-        nb = (
-            g.join(masks.withColumnRenamed("vid", "src"), "src")
-            .groupBy(F.col("dst").alias("vid"))
-            .agg(*[F.bit_or(c).alias(f"o_{c}") for c in cols])
-        )
-        masks = masks.join(nb, "vid", "left").select(
-            "vid",
-            *[
-                (F.col(c).bitwiseOR(F.coalesce(F.col(f"o_{c}"), F.lit(0)))).alias(c)
-                for c in cols
-            ],
-        ).localCheckpoint(eager=True)
-    g.unpersist()
-    lzb = None
-    for c in cols:
-        t = F.expr(_lzb_sql(c))
-        lzb = t if lzb is None else lzb + t
+    with spmv_loop(edges if directed else symmetrize(edges), "src") as lp:
+        g = lp.edges
+        masks = _fm_masks(g, cols).localCheckpoint(eager=True)
+        for _ in range(n_hops):
+            nb = (
+                g.join(masks.withColumnRenamed("vid", "src"), "src")
+                .groupBy(F.col("dst").alias("vid"))
+                .agg(*[F.bit_or(c).alias(f"o_{c}") for c in cols])
+            )
+            masks = masks.join(nb, "vid", "left").select(
+                "vid",
+                *[
+                    (F.col(c).bitwiseOR(F.coalesce(F.col(f"o_{c}"), F.lit(0)))).alias(c)
+                    for c in cols
+                ],
+            ).localCheckpoint(eager=True)
+    lzb = sum(F.expr(_lzb_sql(c)) for c in cols)
     return masks.select("vid", *cols, lzb.cast("long").alias("lzb_sum"))
 
 
@@ -139,13 +139,7 @@ def neighborhood_function(
     Σ_v |ball(v, h)|. One cached edge scan; per-hop cost is one
     join + one bit_or groupBy + one sum collect (the comm_allreduce
     analogue — a bounded scalar per hop, not a hot-path collect)."""
-    spark = edges.sparkSession
-    n_shuffle = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    g = (edges if directed else symmetrize(edges)).repartition(n_shuffle, "src").cache()
     cols = [f"s{k}" for k in range(n_sketches)]
-    masks = vertices_from_edges(g).select(
-        "vid", *[F.expr(_fm_mask_sql("vid", k)).alias(c) for k, c in enumerate(cols)]
-    ).localCheckpoint(eager=True)
 
     def total(m: DataFrame) -> float:
         # Histogram-then-ordered-fold instead of F.sum of per-vertex
@@ -163,24 +157,26 @@ def neighborhood_function(
             acc += cnt * 2.0 ** (s / float(n_sketches))
         return acc / FM_PHI
 
-    out = [(0, total(masks))]
-    for h in range(1, max_hops + 1):
-        nb = (
-            g.join(masks.withColumnRenamed("vid", "src"), "src")
-            .groupBy(F.col("dst").alias("vid"))
-            .agg(*[F.bit_or(c).alias(f"o_{c}") for c in cols])
-        )
-        masks = masks.join(nb, "vid", "left").select(
-            "vid",
-            *[
-                (F.col(c).bitwiseOR(F.coalesce(F.col(f"o_{c}"), F.lit(0)))).alias(c)
-                for c in cols
-            ],
-        ).localCheckpoint(eager=True)
-        out.append((h, total(masks)))
-        if out[-1][1] <= out[-2][1] * (1.0 + 1e-12):
-            break  # OR fixed point reached — sketch totals are monotone
-    g.unpersist()
+    with spmv_loop(edges if directed else symmetrize(edges), "src") as lp:
+        g = lp.edges
+        masks = _fm_masks(g, cols).localCheckpoint(eager=True)
+        out = [(0, total(masks))]
+        for h in range(1, max_hops + 1):
+            nb = (
+                g.join(masks.withColumnRenamed("vid", "src"), "src")
+                .groupBy(F.col("dst").alias("vid"))
+                .agg(*[F.bit_or(c).alias(f"o_{c}") for c in cols])
+            )
+            masks = masks.join(nb, "vid", "left").select(
+                "vid",
+                *[
+                    (F.col(c).bitwiseOR(F.coalesce(F.col(f"o_{c}"), F.lit(0)))).alias(c)
+                    for c in cols
+                ],
+            ).localCheckpoint(eager=True)
+            out.append((h, total(masks)))
+            if out[-1][1] <= out[-2][1] * (1.0 + 1e-12):
+                break  # OR fixed point reached — sketch totals are monotone
     return out
 
 
@@ -201,49 +197,41 @@ def harmonic_centrality_estimates(
     vertex, still whole-stage-codegen friendly). With `directed=True`
     balls are in-balls (see anf_masks), giving the in-harmonic
     centrality — the link-authority variant."""
-    spark = edges.sparkSession
-    n_shuffle = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    g = (edges if directed else symmetrize(edges)).repartition(n_shuffle, "src").cache()
     cols = [f"s{k}" for k in range(n_sketches)]
 
     def est():
-        lzb = None
-        for c in cols:
-            t = F.expr(_lzb_sql(c))
-            lzb = t if lzb is None else lzb + t
+        lzb = sum(F.expr(_lzb_sql(c)) for c in cols)
         return F.pow(F.lit(2.0), lzb / float(n_sketches)) / FM_PHI
 
-    cur = vertices_from_edges(g).select(
-        "vid",
-        *[F.expr(_fm_mask_sql("vid", k)).alias(c) for k, c in enumerate(cols)],
-    )
-    cur = cur.select("*", est().alias("prev_est"), F.lit(0.0).alias("harmonic_est"))
-    cur = cur.localCheckpoint(eager=True)
-    for h in range(1, max_hops + 1):
-        nb = (
-            g.join(cur.select("vid", *cols).withColumnRenamed("vid", "src"), "src")
-            .groupBy(F.col("dst").alias("vid"))
-            .agg(*[F.bit_or(c).alias(f"o_{c}") for c in cols])
-        )
-        merged = cur.join(nb, "vid", "left").select(
-            "vid",
-            *[
-                (F.col(c).bitwiseOR(F.coalesce(F.col(f"o_{c}"), F.lit(0)))).alias(c)
-                for c in cols
-            ],
-            "prev_est",
-            "harmonic_est",
-        )
-        cur = merged.select(
-            "vid",
-            *cols,
-            est().alias("prev_est"),
-            (
-                F.col("harmonic_est")
-                + F.greatest(est() - F.col("prev_est"), F.lit(0.0)) / float(h)
-            ).alias("harmonic_est"),
-        ).localCheckpoint(eager=True)
-    g.unpersist()
+    with spmv_loop(edges if directed else symmetrize(edges), "src") as lp:
+        g = lp.edges
+        cur = _fm_masks(g, cols)
+        cur = cur.select("*", est().alias("prev_est"), F.lit(0.0).alias("harmonic_est"))
+        cur = cur.localCheckpoint(eager=True)
+        for h in range(1, max_hops + 1):
+            nb = (
+                g.join(cur.select("vid", *cols).withColumnRenamed("vid", "src"), "src")
+                .groupBy(F.col("dst").alias("vid"))
+                .agg(*[F.bit_or(c).alias(f"o_{c}") for c in cols])
+            )
+            merged = cur.join(nb, "vid", "left").select(
+                "vid",
+                *[
+                    (F.col(c).bitwiseOR(F.coalesce(F.col(f"o_{c}"), F.lit(0)))).alias(c)
+                    for c in cols
+                ],
+                "prev_est",
+                "harmonic_est",
+            )
+            cur = merged.select(
+                "vid",
+                *cols,
+                est().alias("prev_est"),
+                (
+                    F.col("harmonic_est")
+                    + F.greatest(est() - F.col("prev_est"), F.lit(0.0)) / float(h)
+                ).alias("harmonic_est"),
+            ).localCheckpoint(eager=True)
     return cur.select("vid", "harmonic_est")
 
 

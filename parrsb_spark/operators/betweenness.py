@@ -102,9 +102,7 @@ def _ordered_fold_delta(terms: DataFrame, two_level: bool) -> DataFrame:
     )
 
 
-def _brandes_passes(
-    e: DataFrame, sources: DataFrame, max_hops: int, fold_cap: int | None = None
-):
+def _brandes_passes(e: DataFrame, sources: DataFrame, max_hops: int):
     """Shared forward+backward Brandes machinery. Returns
     (delta_levels, term_levels): per-level vertex dependencies
     (s, vid, delta) and per-level DAG-edge terms
@@ -112,18 +110,17 @@ def _brandes_passes(
     dependency contribution, which vertex betweenness folds per (s, u)
     and edge betweenness (Girvan–Newman) folds per canonical edge.
 
-    `fold_cap` (default FOLD_CAP) bounds the per-(s, u) successor array
-    of the backward fold: the gate is ONE max-out-degree probe on the
-    cached edge set, and only graphs with a hub past the cap take the
-    two-level fold path (see FOLD_CAP)."""
+    FOLD_CAP bounds the per-(s, u) successor array of the backward
+    fold: the gate is ONE max-out-degree probe on the cached edge set,
+    and only graphs with a hub past the cap take the two-level fold
+    path, which buckets by the same FOLD_CAP."""
     spark = e.sparkSession
-    cap = FOLD_CAP if fold_cap is None else int(fold_cap)
     # one bounded probe (the pagerank/CC skew-gate pattern): the
     # successor count per (s, u) is bounded by the max out-degree
     mx_out = (
         e.groupBy("src").agg(F.count("*").alias("d")).agg(F.max("d")).collect()[0][0]
     )
-    two_level = (mx_out or 0) > cap
+    two_level = (mx_out or 0) > FOLD_CAP
 
     # forward: settled (s, vid, dist, sigma); frontier = newest level
     frontier = sources.select(

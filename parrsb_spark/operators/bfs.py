@@ -33,8 +33,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from parrsb_spark.functions.loop import spmv_loop
 from parrsb_spark.functions.spmv import symmetrize
-from parrsb_spark.session import iterative_conf
 
 
 def bfs_distances(
@@ -51,18 +51,12 @@ def bfs_distances(
     follows edges src→dst only (crawl direction), the default expands
     over the symmetrized graph (link neighborhood).
     """
-    spark = edges.sparkSession
-    n_shuffle = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    g = (edges if directed else symmetrize(edges)).repartition(n_shuffle, "src").cache()
-
-    from parrsb_spark.config import default_options as _dflt
-
-    mx = g.groupBy("src").agg(F.count("*").alias("d")).agg(F.max("d")).collect()[0][0]
-    frontier = (
-        seeds.select("vid").distinct().withColumn("dist", F.lit(0).cast("long"))
-    ).localCheckpoint(eager=True)
-    settled = frontier
-    with iterative_conf(spark, disable_aqe=(mx or 0) <= _dflt().salt_degree_threshold):
+    with spmv_loop(edges if directed else symmetrize(edges), "src") as lp:
+        g = lp.edges
+        frontier = (
+            seeds.select("vid").distinct().withColumn("dist", F.lit(0).cast("long"))
+        ).localCheckpoint(eager=True)
+        settled = frontier
         for h in range(1, max_hops + 1):
             reached = (
                 g.join(frontier.select(F.col("vid").alias("src")), "src")
@@ -77,5 +71,4 @@ def bfs_distances(
             if frontier.count() == 0:
                 break
             settled = settled.unionByName(frontier)
-    g.unpersist()
     return settled.select("vid", "dist")

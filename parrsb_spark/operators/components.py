@@ -26,8 +26,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from parrsb_spark.functions.loop import spmv_loop
 from parrsb_spark.functions.spmv import symmetrize
-from parrsb_spark.session import iterative_conf
 from parrsb_spark.sources.edges import vertices_from_edges
 
 
@@ -42,37 +42,7 @@ def connected_components(
     `chain` propagation rounds run fused between convergence checks (the
     check compares against the state before the burst: a burst with zero
     movement ⇒ global fixpoint, since min-label updates are monotone)."""
-    spark = edges.sparkSession
-    n_shuffle = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    # sorted at cache time — per-round SMJ skips the |E| re-sort (see
-    # pagerank); broadcast-off in the loop stops the planner from
-    # re-broadcasting this cached table every round
-    sym = symmetrize(edges).repartition(n_shuffle, "src").sortWithinPartitions("src").cache()
     verts = (vertices or vertices_from_edges(edges)).select("vid")
-    labels = verts.withColumn("comp", F.col("vid")).repartition(n_shuffle, "vid").cache()
-    # measured-skew AQE gate (see session.iterative_conf): one degree
-    # probe over the cached edge side decides whether loop AQE's
-    # skew-join split is needed (hub past the salting threshold) or pure
-    # per-iteration re-planning overhead (hub-free case)
-    from parrsb_spark.config import default_options as _dflt
-    from parrsb_spark.session import loop_partitions
-
-    prow = (
-        sym.groupBy("src")
-        .agg(F.count("*").alias("d"))
-        .agg(F.max("d").alias("mx"), F.sum("d").alias("ne"))
-        .collect()[0]
-    )
-    loop_no_aqe = (prow["mx"] or 0) <= _dflt().salt_degree_threshold
-    # scale-adaptive loop parallelism (session.loop_partitions): re-key
-    # the cached edge side so the per-round join stays exchange-free;
-    # no-op when the derived count equals the session conf
-    n_loop = loop_partitions(int(prow["ne"] or 0), n_shuffle)
-    if n_loop != n_shuffle:
-        sym2 = sym.repartition(n_loop, "src").sortWithinPartitions("src").cache()
-        sym2.count()
-        sym.unpersist()
-        sym = sym2
 
     def one_round(lbl: DataFrame) -> DataFrame:
         nbr_min = (
@@ -84,13 +54,12 @@ def connected_components(
             "vid", F.least("comp", F.coalesce("nbr", "comp")).alias("comp")
         )
 
-    done = 0
-    with iterative_conf(
-        spark,
-        disable_aqe=loop_no_aqe,
-        no_auto_broadcast=True,
-        shuffle_partitions=n_loop,
-    ):
+    # broadcast-off in the loop stops the planner from re-broadcasting
+    # the cached edge table every round
+    with spmv_loop(symmetrize(edges), "src", auto_broadcast=False) as lp:
+        sym = lp.edges
+        labels = lp.cache(verts.withColumn("comp", F.col("vid")).repartition(lp.partitions, "vid"))
+        done = 0
         while done < max_iter:
             prev = labels
             for _ in range(min(chain, max_iter - done)):
@@ -104,7 +73,6 @@ def connected_components(
             )
             if changed == 0:
                 break
-    sym.unpersist()
     return labels
 
 

@@ -38,8 +38,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from parrsb_spark.functions.loop import spmv_loop
 from parrsb_spark.functions.spmv import symmetrize
-from parrsb_spark.session import iterative_conf
 
 
 def _h_index(nbr_est: DataFrame) -> DataFrame:
@@ -65,15 +65,13 @@ def coreness(edges: DataFrame, max_rounds: int = 32) -> DataFrame:
     converged rounds are no-ops and the fixed point equals running
     exactly `max_rounds` rounds — the unrolled-oracle contract; an
     UNconverged bound still equals the oracle at the same bound)."""
-    spark = edges.sparkSession
-    n_shuffle = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    sym = symmetrize(edges).repartition(n_shuffle, "src").cache()
-    est = (
-        sym.groupBy(F.col("src").alias("vid"))
-        .agg(F.count("*").cast("int").alias("est"))
-        .localCheckpoint(eager=True)
-    )
-    with iterative_conf(spark):
+    with spmv_loop(symmetrize(edges), "src") as lp:
+        sym = lp.edges
+        est = (
+            sym.groupBy(F.col("src").alias("vid"))
+            .agg(F.count("*").cast("int").alias("est"))
+            .localCheckpoint(eager=True)
+        )
         for _ in range(max_rounds):
             nbr = (
                 sym.join(

@@ -92,7 +92,8 @@ def _attach_group_scalars(
     (for recombine: × basis-length) map literals several times per
     iteration, so plan size / Catalyst compile time explodes while the
     broadcast form stays flat: one tiny exchange reused by the iteration
-    plan. Crossover measured at tools/group_scalar_crossover.py.
+    plan. Crossover (~2k groups) recorded in BASELINE.md "Round-4
+    deep-k RSB: k=1024 end-to-end, both group-scalar paths".
 
     In the broadcast branch the joined columns are named `_sc_<name>`;
     callers that must preserve schema drop them via

@@ -28,7 +28,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from parrsb_spark.session import iterative_conf
+from parrsb_spark.functions.loop import key_degrees, spmv_loop
 from parrsb_spark.sources.edges import vertices_from_edges
 
 
@@ -44,17 +44,6 @@ def hits(
     Vertices with no in-edges get auth = 0; no out-edges get hub = 0;
     isolated vertices (present in `vertices` only) get both = 0.
     """
-    spark = edges.sparkSession
-    n_shuffle = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    e = edges.select("src", "dst").repartition(n_shuffle, "src").cache()
-    verts = (
-        (vertices or vertices_from_edges(e))
-        .select("vid")
-        .repartition(n_shuffle, "vid")
-        .cache()
-    )
-    state = verts.select("vid", F.lit(1.0).alias("hub"), F.lit(0.0).alias("auth"))
-
     def _normalized_gather(r: DataFrame, value: str, key: str, out: str) -> DataFrame:
         """out[v] = Σ_{edge} r[value] gathered onto `key`, then L2-normalized.
 
@@ -86,20 +75,16 @@ def hits(
             )
         )
 
-    # measured-skew AQE gate (see session.iterative_conf): one probe of
-    # the max in/out degree on the cached edge side — both gathers can
-    # funnel on a hub, so gate on the larger of the two
-    from parrsb_spark.config import default_options as _dflt
-
-    mx = (
-        e.select(F.col("src").alias("vid"))
-        .unionAll(e.select(F.col("dst").alias("vid")))
-        .groupBy("vid")
-        .agg(F.count("*").alias("d"))
-        .agg(F.max("d"))
-        .collect()[0][0]
-    )
-    with iterative_conf(spark, disable_aqe=(mx or 0) <= _dflt().salt_degree_threshold):
+    # both gathers can funnel on a hub, so the AQE gate reads the total
+    # (in + out) degree
+    with spmv_loop(
+        edges.select("src", "dst"), "src", probe=lambda lp: key_degrees(lp.edges, "src", "dst")
+    ) as lp:
+        e = lp.edges
+        verts = lp.cache(
+            (vertices or vertices_from_edges(e)).select("vid").repartition(lp.partitions, "vid")
+        )
+        state = verts.select("vid", F.lit(1.0).alias("hub"), F.lit(0.0).alias("auth"))
         for _ in range(n_iter):
             # authority half-step: gather hub along edges onto dst
             state = _normalized_gather(state, "hub", "dst", "_a").select(

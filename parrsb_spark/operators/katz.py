@@ -30,8 +30,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from parrsb_spark.functions.loop import spmv_loop
 from parrsb_spark.functions.spmv import symmetrize
-from parrsb_spark.session import iterative_conf
 from parrsb_spark.sources.edges import vertices_from_edges
 
 
@@ -46,20 +46,17 @@ def katz_centrality(
     contract: katz = Σ_{k=1..R} α^k · w_k(v) evaluated in ascending-k
     order with IEEE doubles over exact integer w_k — bitwise
     partition-independent and replayed verbatim by the SQL oracle."""
-    spark = edges.sparkSession
-    n_shuffle = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    e = (edges.select("src", "dst") if directed else symmetrize(edges))
-    e = e.repartition(n_shuffle, "src").cache()
-    st = (
-        vertices_from_edges(edges)
-        .select(
-            "vid",
-            F.lit(1).cast("decimal(38,0)").alias("w"),
-            F.lit(0.0).alias("katz"),
+    with spmv_loop(edges.select("src", "dst") if directed else symmetrize(edges), "src") as lp:
+        e = lp.edges
+        st = (
+            vertices_from_edges(edges)
+            .select(
+                "vid",
+                F.lit(1).cast("decimal(38,0)").alias("w"),
+                F.lit(0.0).alias("katz"),
+            )
+            .localCheckpoint(eager=True)
         )
-        .localCheckpoint(eager=True)
-    )
-    with iterative_conf(spark):
         for k in range(1, rounds + 1):
             g = (
                 e.join(st.select(F.col("vid").alias("src"), "w"), "src")

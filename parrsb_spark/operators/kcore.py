@@ -25,8 +25,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from parrsb_spark.functions.loop import spmv_loop
 from parrsb_spark.functions.spmv import symmetrize
-from parrsb_spark.session import iterative_conf
 from parrsb_spark.sources.edges import vertices_from_edges
 
 
@@ -42,17 +42,11 @@ def kcore(
     fixed point equals the result of running exactly `max_rounds`
     rounds (the contract the unrolled SQL oracle replays).
     """
-    spark = edges.sparkSession
-    n_shuffle = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    sym = symmetrize(edges).repartition(n_shuffle, "src").cache()
     alive = (vertices or vertices_from_edges(edges)).select("vid")
-
-    from parrsb_spark.config import default_options as _dflt
-
-    mx = sym.groupBy("src").agg(F.count("*").alias("d")).agg(F.max("d")).collect()[0][0]
     prev_n = None
     deg = None
-    with iterative_conf(spark, disable_aqe=(mx or 0) <= _dflt().salt_degree_threshold):
+    with spmv_loop(symmetrize(edges), "src") as lp:
+        sym = lp.edges
         for _ in range(max_rounds):
             deg = (
                 sym.join(alive.select(F.col("vid").alias("src")), "src")

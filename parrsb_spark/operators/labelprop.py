@@ -24,8 +24,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from parrsb_spark.functions.loop import spmv_loop
 from parrsb_spark.functions.spmv import symmetrize
-from parrsb_spark.session import iterative_conf
 from parrsb_spark.sources.edges import vertices_from_edges
 
 
@@ -36,20 +36,10 @@ def label_propagation(
     checkpoint_interval: int = 4,
 ) -> DataFrame:
     """Returns (vid, label) after n_iter synchronous rounds (labels init = vid)."""
-    spark = edges.sparkSession
-    n_shuffle = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    sym = symmetrize(edges).repartition(n_shuffle, "src").cache()
     verts = (vertices or vertices_from_edges(edges)).select("vid")
     labels = verts.withColumn("label", F.col("vid"))
-
-    # measured-skew AQE gate (see session.iterative_conf): one degree
-    # probe on the cached edge side; hub-free graphs skip loop AQE
-    from parrsb_spark.config import default_options as _dflt
-
-    mx = sym.groupBy("src").agg(F.count("*").alias("d")).agg(F.max("d")).collect()[0][0]
-    # `with` (not a bare __enter__) so an exception inside the loop still
-    # restores the session AQE/constraint-propagation conf on exit
-    with iterative_conf(spark, disable_aqe=(mx or 0) <= _dflt().salt_degree_threshold):
+    with spmv_loop(symmetrize(edges), "src") as lp:
+        sym = lp.edges
         for it in range(n_iter):
             nbr = sym.join(labels.select(F.col("vid").alias("src"), "label"), "src").select(
                 F.col("dst").alias("vid"), "label"
@@ -67,5 +57,4 @@ def label_propagation(
             )
             if (it + 1) % checkpoint_interval == 0:
                 labels = labels.localCheckpoint(eager=True)
-    sym.unpersist()
     return labels

@@ -34,8 +34,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from parrsb_spark.session import iterative_conf
-from parrsb_spark.sources.edges import vertices_from_edges
+from parrsb_spark.functions.loop import key_degrees, spmv_loop
 
 
 def pagerank(
@@ -60,18 +59,16 @@ def pagerank(
     IDENTICAL values through the identical plan — outdeg below is
     sum(1) per src either way.
 
-    Hub salting is armed BY DEFAULT: when the max in-degree exceeds
-    `salt_degree_threshold` (from `opts` or the env-overridable
-    defaults), the per-iteration contribution aggregation runs as the
-    explicit two-stage salted form (functions/spmv.py `salted_agg`).
+    Hub salting is armed BY DEFAULT: when the max in-degree exceeds the
+    loop's hub threshold (functions/loop.py; from `opts` or the env-
+    overridable defaults), the per-iteration contribution aggregation
+    runs as the explicit two-stage salted form (functions/spmv.py `salted_agg`).
     Spark's map-side partial aggregation already combines hub keys per
     map task; the salted path covers the residual funnel where ONE
     reduce key still receives a partial from each of ~10⁵ map tasks.
     The in-degree probe is folded into the degree aggregation the setup
     already pays (one union-groupBy computes out- AND in-degree) — zero
     extra jobs, so it no longer hides behind an opts gate."""
-    spark = edges.sparkSession
-    n_shuffle = int(spark.conf.get("spark.sql.shuffle.partitions"))
     d = damping
 
     # the weight column is carried ONLY when weighted — a materialized
@@ -79,68 +76,41 @@ def pagerank(
     ecols = ["src", "dst"] + (
         [F.col(weight_col).cast("long").alias("_w")] if weight_col else []
     )
-    # sorted at cache time: the per-iteration co-partitioned SMJ then
-    # reuses the cached ordering instead of re-sorting |E| rows per
-    # iteration (InMemoryRelation preserves child outputOrdering)
-    e = edges.select(*ecols).repartition(n_shuffle, "src").sortWithinPartitions("src").cache()
     out_w = F.col("_w") if weight_col else F.lit(1)
-    deg = (
-        e.select(F.col("src").alias("vid"), out_w.alias("_o"), F.lit(0).alias("_i"))
-        .unionAll(e.select(F.col("dst").alias("vid"), F.lit(0).alias("_o"), F.lit(1).alias("_i")))
-        .groupBy("vid")
-        .agg(F.sum("_o").alias("outdeg"), F.sum("_i").alias("indeg"))
-    )
-    if vertices is None:
-        # the degree aggregate's key set IS the endpoint vertex set —
-        # deriving vertices separately would pay a second full 2|E|
-        # distinct exchange for the identical rows (guide §2.4)
-        state = deg.repartition(n_shuffle, "vid").cache()
-    else:
-        state = (
-            vertices.select("vid")
-            .join(deg, "vid", "left")
-            .select(
+    state = None
+
+    def setup(lp) -> DataFrame:
+        # out- and in-degree from ONE union aggregate over the cached
+        # edges, cached as the loop state; the loop's setup aggregate
+        # then reads n, max in-degree and |E| from it in the same job
+        nonlocal state
+        e = lp.edges
+        deg = (
+            e.select(F.col("src").alias("vid"), out_w.alias("_o"), F.lit(0).alias("_i"))
+            .unionAll(e.select(F.col("dst").alias("vid"), F.lit(0).alias("_o"), F.lit(1).alias("_i")))
+            .groupBy("vid")
+            .agg(F.sum("_o").alias("outdeg"), F.sum("_i").alias("indeg"))
+        )
+        if vertices is not None:
+            deg = vertices.select("vid").join(deg, "vid", "left").select(
                 "vid",
                 F.coalesce("outdeg", F.lit(0)).alias("outdeg"),
                 F.coalesce("indeg", F.lit(0)).alias("indeg"),
             )
-            .repartition(n_shuffle, "vid")
-            .cache()
+        # with no `vertices`, the degree aggregate's key set IS the
+        # endpoint vertex set — deriving vertices separately would pay a
+        # second full 2|E| distinct exchange for the identical rows
+        state = lp.cache(deg.repartition("vid"))
+        return state.agg(
+            F.count("*").alias("n"),
+            # max OUT-degree is the per-src edge-row concentration the
+            # loop's skew-join gate is about; max IN-degree is the
+            # reduce funnel salting exists for; |E| (indeg sums 1 per
+            # edge row even when weighted) sizes the loop
+            F.max("outdeg").alias("max_degree"),
+            F.max("indeg").alias("mi"),
+            F.sum("indeg").alias("rows"),
         )
-    srow = state.agg(
-        F.count("*").alias("n"),
-        F.max("outdeg").alias("mx"),
-        F.max("indeg").alias("mi"),
-        # |E| rides the same setup aggregate (indeg sums 1 per edge row
-        # even in weighted mode) — feeds the loop-parallelism derivation
-        F.sum("indeg").alias("ne"),
-    ).collect()[0]
-    n = srow["n"]
-    if n == 0:
-        return state.select("vid", F.lit(0.0).alias("pr"))
-    from parrsb_spark.config import default_options as _dflt
-    from parrsb_spark.session import loop_partitions
-
-    thr = (opts or _dflt()).salt_degree_threshold
-    # max IN-degree is the reduce-funnel concentration salting exists for
-    use_salt = float(srow["mi"] or 0) > thr
-    # measured-skew AQE gate (see session.iterative_conf): max OUT-degree
-    # IS the per-src edge-row concentration the skew-JOIN split exists
-    # for; below the salting threshold, loop AQE is pure re-planning
-    # overhead. One agg, folded into the row count the setup already paid.
-    loop_no_aqe = float(srow["mx"] or 0) <= thr
-    # scale-adaptive loop parallelism (guide §2.2 — see
-    # session.loop_partitions): re-key the cached edge side to it so the
-    # per-iteration join stays exchange-free; a no-op when the derived
-    # count equals the session conf (any cluster-sized input)
-    n_loop = loop_partitions(int(srow["ne"] or 0), n_shuffle)
-    if n_loop != n_shuffle:
-        e2 = e.repartition(n_loop, "src").sortWithinPartitions("src").cache()
-        e2.count()  # materialize from the n_shuffle cache, then free it
-        e.unpersist()
-        e = e2
-
-    ranks = state.select("vid", "outdeg").withColumn("pr", F.lit(1.0 / n))
 
     def one_iter(r: DataFrame) -> DataFrame:
         # dangling mass as a broadcast 1-row aggregate — no driver round-trip
@@ -183,14 +153,18 @@ def pagerank(
             )
         )
 
-    iters = fixed_iters if fixed_iters is not None else max_iter
-    done = 0
-    with iterative_conf(
-        spark,
-        disable_aqe=loop_no_aqe,
-        no_auto_broadcast=True,
-        shuffle_partitions=n_loop,
-    ):
+    with spmv_loop(
+        edges.select(*ecols), "src", auto_broadcast=False, probe=setup, opts=opts
+    ) as lp:
+        e = lp.edges
+        n = lp.stats["n"]
+        if n == 0:
+            return state.select("vid", F.lit(0.0).alias("pr"))
+        use_salt = float(lp.stats["mi"] or 0) > lp.hub_threshold
+        ranks = state.select("vid", "outdeg").withColumn("pr", F.lit(1.0 / n))
+
+        iters = fixed_iters if fixed_iters is not None else max_iter
+        done = 0
         while done < iters:
             burst = min(chain, iters - done)
             prev = ranks
@@ -245,48 +219,14 @@ def personalized_pagerank(
     Returns (vid, pr) after exactly `fixed_iters` iterations (oracle-
     parity mode; the entry row unrolls the same count in SQL).
     """
-    spark = edges.sparkSession
-    n_shuffle = int(spark.conf.get("spark.sql.shuffle.partitions"))
     d = damping
+    seed_set = seeds.select("vid").distinct()
 
-    e = edges.select("src", "dst").repartition(n_shuffle, "src").sortWithinPartitions("src").cache()
-    if vertices is None:
-        # one union aggregate yields the vertex set AND outdeg together —
-        # no separate 2|E| vertex distinct (see pagerank)
-        verts_deg = (
-            e.select(F.col("src").alias("vid"), F.lit(1).alias("_o"))
-            .unionAll(e.select(F.col("dst").alias("vid"), F.lit(0).alias("_o")))
-            .groupBy("vid")
-            .agg(F.sum("_o").alias("outdeg"))
+    def setup(lp) -> DataFrame:
+        # the seed count rides the loop's setup aggregate: one job
+        return key_degrees(lp.edges, "src").crossJoin(
+            seed_set.agg(F.count("*").alias("n_seeds"))
         )
-    else:
-        outdeg = e.groupBy(F.col("src").alias("vid")).agg(F.count("*").alias("outdeg"))
-        verts_deg = (
-            vertices.select("vid")
-            .join(outdeg, "vid", "left")
-            .select("vid", F.coalesce("outdeg", F.lit(0)).alias("outdeg"))
-        )
-    n_seeds = seeds.select("vid").distinct().count()
-    if n_seeds == 0:
-        return verts_deg.select("vid", F.lit(0.0).alias("pr"))
-    state = (
-        verts_deg
-        .join(
-            F.broadcast(seeds.select("vid").distinct().withColumn("_s", F.lit(1))),
-            "vid",
-            "left",
-        )
-        .select(
-            "vid",
-            F.coalesce("outdeg", F.lit(0)).alias("outdeg"),
-            F.when(F.col("_s").isNotNull(), F.lit(1.0 / n_seeds))
-            .otherwise(F.lit(0.0))
-            .alias("tele"),
-        )
-        .repartition(n_shuffle, "vid")
-        .cache()
-    )
-    ranks = state.withColumn("pr", F.col("tele"))
 
     def one_iter(r: DataFrame) -> DataFrame:
         dang = F.broadcast(
@@ -322,8 +262,43 @@ def personalized_pagerank(
             )
         )
 
-    done = 0
-    with iterative_conf(spark, disable_aqe=True, no_auto_broadcast=True):
+    with spmv_loop(
+        edges.select("src", "dst"), "src", auto_broadcast=False, probe=setup
+    ) as lp:
+        e = lp.edges
+        if vertices is None:
+            # one union aggregate yields the vertex set AND outdeg together —
+            # no separate 2|E| vertex distinct (see pagerank)
+            verts_deg = (
+                e.select(F.col("src").alias("vid"), F.lit(1).alias("_o"))
+                .unionAll(e.select(F.col("dst").alias("vid"), F.lit(0).alias("_o")))
+                .groupBy("vid")
+                .agg(F.sum("_o").alias("outdeg"))
+            )
+        else:
+            outdeg = e.groupBy(F.col("src").alias("vid")).agg(F.count("*").alias("outdeg"))
+            verts_deg = (
+                vertices.select("vid")
+                .join(outdeg, "vid", "left")
+                .select("vid", F.coalesce("outdeg", F.lit(0)).alias("outdeg"))
+            )
+        n_seeds = lp.stats["n_seeds"]
+        if n_seeds == 0:
+            return verts_deg.select("vid", F.lit(0.0).alias("pr"))
+        state = lp.cache(
+            verts_deg
+            .join(F.broadcast(seed_set.withColumn("_s", F.lit(1))), "vid", "left")
+            .select(
+                "vid",
+                F.coalesce("outdeg", F.lit(0)).alias("outdeg"),
+                F.when(F.col("_s").isNotNull(), F.lit(1.0 / n_seeds))
+                .otherwise(F.lit(0.0))
+                .alias("tele"),
+            )
+            .repartition(lp.partitions, "vid")
+        )
+        ranks = state.withColumn("pr", F.col("tele"))
+        done = 0
         while done < fixed_iters:
             burst = min(chain, fixed_iters - done)
             for _ in range(burst):

@@ -126,6 +126,9 @@ def strongly_connected_components(
     scale-correct trade (the IVF trainer's bounded-sample precedent,
     operators/similarity.py). 0 (default) = never collect; pure
     distributed fixpoints."""
+    if max_iter < 1:
+        # the coloring loop's unconverged guard needs at least one pass
+        raise ValueError(f"scc: max_iter must be >= 1, got {max_iter}")
     spark = edges.sparkSession
     n_shuffle = int(spark.conf.get("spark.sql.shuffle.partitions"))
     e_all = (

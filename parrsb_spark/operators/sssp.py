@@ -35,7 +35,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from parrsb_spark.session import iterative_conf
+from parrsb_spark.functions.loop import spmv_loop
 
 _FLOATS = {"double", "float"}
 
@@ -55,24 +55,18 @@ def sssp(
     both directions (parallel reverse edges need no dedup — the min
     reduce absorbs multigraph duplicates).
     """
-    spark = edges.sparkSession
-    n_shuffle = int(spark.conf.get("spark.sql.shuffle.partitions"))
     e = edges.select("src", "dst", F.col(weight_col).alias("w"))
     if not directed:
         e = e.unionByName(
             e.select(F.col("dst").alias("src"), F.col("src").alias("dst"), "w")
         )
-    g = e.filter(F.col("src") != F.col("dst")).repartition(n_shuffle, "src").cache()
-
-    from parrsb_spark.config import default_options as _dflt
-
-    mx = g.groupBy("src").agg(F.count("*").alias("d")).agg(F.max("d")).collect()[0][0]
-    dtype = "double" if dict(g.dtypes)["w"] in _FLOATS else "long"
-    dist = (
-        seeds.select("vid").distinct().withColumn("dist", F.lit(0).cast(dtype))
-    ).localCheckpoint(eager=True)
-    frontier = dist
-    with iterative_conf(spark, disable_aqe=(mx or 0) <= _dflt().salt_degree_threshold):
+    dtype = "double" if dict(e.dtypes)["w"] in _FLOATS else "long"
+    with spmv_loop(e.filter(F.col("src") != F.col("dst")), "src") as lp:
+        g = lp.edges
+        dist = (
+            seeds.select("vid").distinct().withColumn("dist", F.lit(0).cast(dtype))
+        ).localCheckpoint(eager=True)
+        frontier = dist
         for _ in range(max_rounds):
             cand = (
                 g.join(frontier.select(F.col("vid").alias("src"), "dist"), "src")
@@ -94,5 +88,4 @@ def sssp(
                 .unionByName(improved)
                 .localCheckpoint(eager=True)
             )
-    g.unpersist()
     return dist.select("vid", "dist")

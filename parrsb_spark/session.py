@@ -60,8 +60,8 @@ def get_spark(
         # 100 entries — ONE fiedler solve plans ~114 distinct codegen
         # units, so every Lanczos/CG iteration evicts the previous
         # iteration's classes and re-runs sequential Janino compiles on
-        # the driver, forever. Measured (tools/codegen_cache_probe.py,
-        # sf0.1, identical second solve in a warm JVM): cache=100 →
+        # the driver, forever. Measured (BASELINE.md "Round-4 deep-k RSB",
+        # item 5; sf0.1, identical second solve in a warm JVM): cache=100 →
         # 87-109 recompiles; cache=8192 → **0** recompiles. The compile
         # COUNT is the deterministic, reproducible signal; the wall win
         # is real but modest on the bench box and partially masked by
@@ -70,8 +70,8 @@ def get_spark(
         # later identical pair 29.4s vs 67.9s — spreads exceed the
         # delta). The generated sources are iteration-invariant on BOTH
         # group-scalar paths (literal doubles compile by value into
-        # cached classes keyed on source text — see
-        # tools/codegen_bisect_probe.py), so a big-enough cache turns
+        # cached classes keyed on source text — same BASELINE.md
+        # section), so a big-enough cache turns
         # every iteration after the first into pure execution and, on a
         # shared driver, stops the per-iteration compile stalls that
         # serialize job submission. Entries hold source + compiled class
@@ -102,8 +102,8 @@ def loop_partitions(n_rows: int, n_shuffle: int, rows_per_task: int | None = Non
     pagerank 6.3 → 2.5s warm when the loop runs at 8 partitions
     instead of 32. The AQE partition-coalescing that would normally do
     this is deliberately OFF inside iterative loops (see
-    iterative_conf), so the kernels size their loop exchanges
-    explicitly from the row count their setup already collects."""
+    iterative_conf), so loops size their exchanges explicitly from the
+    row count their setup already collects (functions/loop.py)."""
     if rows_per_task is None:
         from parrsb_spark.config import default_options
 
@@ -135,11 +135,7 @@ def iterative_conf(
     best-of-3, and far lower variance. The only AQE feature an
     iterative kernel's plans can use is skew-join splitting (joins are
     pre-hash-partitioned, broadcasts are explicit), so callers gate this
-    on MEASURED degree skew: AQE stays on when a hub vertex exceeds
-    `EngineOptions.salt_degree_threshold` (its edge rows concentrate in
-    one task and the runtime split is the mitigation), and turns off on
-    skew-free graphs where it is pure per-iteration overhead. Restored
-    on exit either way.
+    on measured degree skew (functions/loop.py). Restored on exit.
 
     Constraint propagation is also disabled: Catalyst's constraint
     inference is super-linear in chained join/alias depth, and per-

@@ -1,0 +1,120 @@
+"""The SpMV loop driver (functions/loop.py): conf scope and cache hygiene.
+
+Every ported kernel runs its loop inside `spmv_loop`, which owns the
+edge cache, the degree probe and the `iterative_conf` scope. These
+tests pin the driver's exit contract — the session conf comes back
+unchanged and nothing stays cached — on the failure path and for each
+kernel's normal return.
+"""
+
+from __future__ import annotations
+
+import pytest
+from pyspark.sql import functions as F
+
+from parrsb_spark import graphs
+from parrsb_spark.config import EngineOptions
+from parrsb_spark.functions.loop import spmv_loop
+from parrsb_spark.functions.spmv import symmetrize
+from parrsb_spark.operators.anf import (
+    anf_masks,
+    harmonic_centrality_estimates,
+    neighborhood_function,
+)
+from parrsb_spark.operators.bfs import bfs_distances
+from parrsb_spark.operators.components import connected_components
+from parrsb_spark.operators.coreness import coreness
+from parrsb_spark.operators.hits import hits
+from parrsb_spark.operators.katz import katz_centrality
+from parrsb_spark.operators.kcore import kcore
+from parrsb_spark.operators.labelprop import label_propagation
+from parrsb_spark.operators.pagerank import pagerank, personalized_pagerank
+from parrsb_spark.operators.sssp import sssp
+
+# every key session.iterative_conf can set
+LOOP_CONF_KEYS = (
+    "spark.sql.adaptive.enabled",
+    "spark.sql.adaptive.coalescePartitions.enabled",
+    "spark.sql.constraintPropagation.enabled",
+    "spark.sql.shuffle.partitions",
+    "spark.sql.autoBroadcastJoinThreshold",
+)
+
+
+def _conf(spark) -> dict:
+    out = {}
+    for k in LOOP_CONF_KEYS:
+        try:
+            out[k] = spark.conf.get(k)
+        except Exception:
+            out[k] = None
+    return out
+
+
+def _cache_empty(spark) -> bool:
+    return spark._jsparkSession.sharedState().cacheManager().isEmpty()
+
+
+@pytest.fixture
+def powerlaw(spark):
+    spark.catalog.clearCache()
+    return graphs.to_df(spark, graphs.powerlaw(200, m=3, seed=5))
+
+
+@pytest.mark.parametrize("auto_broadcast", [True, False])
+def test_body_error_restores_conf_and_releases_caches(spark, powerlaw, auto_broadcast):
+    before = _conf(spark)
+    with pytest.raises(RuntimeError, match="body failed"):
+        with spmv_loop(symmetrize(powerlaw), "src", auto_broadcast=auto_broadcast) as lp:
+            lp.cache(lp.edges.select("src")).count()
+            # the loop scope really was in force when the body failed
+            assert spark.conf.get("spark.sql.shuffle.partitions") == str(lp.partitions)
+            assert spark.conf.get("spark.sql.constraintPropagation.enabled") == "false"
+            raise RuntimeError("body failed")
+    assert _conf(spark) == before
+    assert _cache_empty(spark)
+
+
+def test_aqe_kept_only_past_hub_threshold(spark):
+    spark.catalog.clearCache()
+    star = symmetrize(graphs.to_df(spark, graphs.star_hub(30)))
+    for threshold, aqe in ((10, "true"), (1000, "false")):
+        opts = EngineOptions(salt_degree_threshold=threshold)
+        with spmv_loop(star, "src", opts=opts) as lp:
+            assert (lp.stats["rows"], lp.stats["max_degree"]) == (60, 30)
+            assert spark.conf.get("spark.sql.adaptive.enabled") == aqe
+    assert _cache_empty(spark)
+
+
+def _seeds(spark):
+    return spark.createDataFrame([(1,), (7,)], "vid long")
+
+
+KERNELS = {
+    "pagerank": lambda e, s: pagerank(e, fixed_iters=3),
+    "pagerank_converge": lambda e, s: pagerank(e, tol=1e-4, max_iter=4),
+    "personalized_pagerank": lambda e, s: personalized_pagerank(e, _seeds(s), fixed_iters=3),
+    "connected_components": lambda e, s: connected_components(e, max_iter=4),
+    "label_propagation": lambda e, s: label_propagation(e, n_iter=2),
+    "hits": lambda e, s: hits(e, n_iter=2),
+    "katz_centrality": lambda e, s: katz_centrality(e, rounds=3),
+    "kcore": lambda e, s: kcore(e, k=3, max_rounds=3),
+    "coreness": lambda e, s: coreness(e, max_rounds=3),
+    "bfs_distances": lambda e, s: bfs_distances(e, _seeds(s), max_hops=3),
+    "sssp": lambda e, s: sssp(
+        e.withColumn("w", (F.col("src") + F.col("dst")) % 5 + 1), _seeds(s), max_rounds=3
+    ),
+    "anf_masks": lambda e, s: anf_masks(e, n_hops=3),
+    "neighborhood_function": lambda e, s: neighborhood_function(e, max_hops=3),
+    "harmonic_centrality_estimates": lambda e, s: harmonic_centrality_estimates(e, max_hops=3),
+}
+
+
+@pytest.mark.parametrize("name", sorted(KERNELS))
+def test_ported_kernel_leaves_nothing_cached(spark, powerlaw, name):
+    before = _conf(spark)
+    out = KERNELS[name](powerlaw, spark)
+    assert _cache_empty(spark), name
+    assert _conf(spark) == before
+    rows = out if isinstance(out, list) else out.collect()
+    assert len(rows) > 0

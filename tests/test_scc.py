@@ -11,6 +11,7 @@ independent exact algorithm, the components/triangles discipline
 from __future__ import annotations
 
 import hypothesis.strategies as st
+import pytest
 from hypothesis import given, settings
 
 from parrsb_spark import graphs
@@ -45,6 +46,11 @@ def test_tarjan_local_on_handmade():
 def test_scc_handmade_exact(spark):
     got = _scc_map(strongly_connected_components(graphs.to_df(spark, HANDMADE)))
     assert got == HANDMADE_SCC
+
+
+def test_scc_rejects_nonpositive_max_iter(spark):
+    with pytest.raises(ValueError, match="max_iter"):
+        strongly_connected_components(graphs.to_df(spark, HANDMADE), max_iter=0)
 
 
 def test_scc_local_threshold_path_identical(spark):
