@@ -11,12 +11,11 @@ Every field here is CONSUMED somewhere (no dead knobs):
 - repair       → operators/rsb.py `_repair_parts`
 - verbose      → operators/rsb.py per-cut progress prints
 - rsb_*        → operators/fiedler.py / rsb.py
-- spmv_impl    → operators/fiedler.py physical SpMV strategy
 - salt_degree_threshold   → functions/loop.py: the SpMV loop driver keeps
-               AQE on only past this max degree (every ported kernel);
-               pagerank's salted hub aggregation; fiedler's loop AQE gate
+               AQE on only past this max degree (every SpMV loop);
+               pagerank's salted hub aggregation
 - loop_rows_per_task       → functions/loop.py (via session.loop_partitions):
-               loop parallelism of every ported kernel; fiedler's Lanczos loop
+               loop parallelism of every SpMV loop
 - broadcast_threshold_rows / broadcast_threshold_mb
                → operators/similarity.py query-side broadcast gate
 - group_scalar_broadcast_threshold
@@ -62,10 +61,6 @@ class EngineOptions:
     mg_tail_threshold: int = 2000  # MG levels below this total size run as a
                                    # collected numpy tail (driver-side V-cycle
                                    # continuation; coarse vectors are tiny)
-    spmv_impl: str = "join"       # join | block | csr_arrow — Laplacian-apply
-                                  # physical plan (block = pre-blocked edges +
-                                  # halo join; csr_arrow = per-block Arrow/numpy,
-                                  # ref mat.c:829-846 — see functions/spmv.py)
 
     # --- Spark-specific knobs (no reference analogue) ---
     # (shuffle parallelism is a SESSION concern — get_spark(shuffle_partitions=…)

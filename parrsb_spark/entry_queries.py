@@ -872,12 +872,21 @@ def q_graph_assortativity(spark, sf_dir):
     # At the correctness scale factors every sum fits comfortably in
     # int64 (s_xy < 10^15 at sf0.1), so the QUERY SURFACE casts to
     # bigint; the kernel itself keeps the exact decimal arithmetic.
-    return out.select(
-        "m",
-        F.col("s_x").cast("long").alias("s_x"),
-        F.col("s_xy").cast("long").alias("s_xy"),
-        F.col("s_xx").cast("long").alias("s_xx"),
-        "r",
+    return out.select("m", *[checked_long(c) for c in ("s_x", "s_xy", "s_xx")], "r")
+
+
+def checked_long(name: str):
+    """Column `name` cast to bigint, raising when the value lies outside
+    int64 under either ANSI setting (ANSI off would otherwise return
+    NULL). NULL stays NULL."""
+    c = F.col(name)
+    return (
+        F.when(
+            ~c.between(F.lit(-(1 << 63)), F.lit((1 << 63) - 1)),
+            F.raise_error(F.lit(f"{name} is outside the bigint range")),
+        )
+        .otherwise(c.cast("long"))
+        .alias(name)
     )
 
 

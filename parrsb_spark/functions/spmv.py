@@ -14,7 +14,8 @@ is a driver loop over this primitive. Scale notes:
   sum/min/max (hub keys combine before the shuffle);
 - the join side is skew-handled by AQE skew-join splitting (enabled in
   session.py); for extreme hubs callers can pre-salt via `salted_agg`;
-- callers cache `edges` once per solve — it is the loop-invariant side.
+- `functions/loop.spmv_loop` caches `edges` once per solve — it is the
+  loop-invariant side.
 """
 
 from __future__ import annotations
@@ -68,103 +69,6 @@ def gather_scatter(
         edges.join(state.select(F.col("vid").alias("src"), F.col(value_col)), "src")
         .groupBy(F.col("dst").alias("vid"))
         .agg(fn(value_col).alias(out_col))
-    )
-
-
-def csr_block_setup(edges: DataFrame, n_blocks: int) -> tuple[DataFrame, DataFrame]:
-    """One-time setup for the CSR Arrow-block SpMV path (D3/D5 — ref
-    `par_csr_init`, /root/reference/src/laplacian.c:68-91, and
-    `mat_vec_csr`, src/mat.c:829-846).
-
-    Partitions the edge set into `n_blocks` destination blocks and
-    derives the halo map (which source vertices each block needs — the
-    reference's compressed off-diagonal column index). Both are cached:
-    the EDGE BYTES NEVER MOVE AGAIN — each iteration ships only the
-    (vertex, value) halo rows, the gs-message analogue.
-
-    Returns (eblk, halo): eblk = (src, dst, blk) hash-partitioned and
-    cached by blk; halo = (src, blk) distinct, partitioned by src so the
-    per-iteration join with the vertex state is co-partitioned."""
-    n_shuffle = int(edges.sparkSession.conf.get("spark.sql.shuffle.partitions"))
-    # eager localCheckpoint (not just cache): the LOGICAL plans must be flat
-    # LogicalRDDs, because both re-enter every iteration's plan — carrying
-    # the full upstream derivation into each analysis round makes Catalyst's
-    # per-iteration stats/constraint rewriting the bottleneck (measured as a
-    # driver-side hang at sf0.1).
-    eblk = (
-        edges.select("src", "dst")
-        .withColumn("blk", F.pmod(F.col("dst"), F.lit(n_blocks)))
-        .repartition(n_blocks, "blk")
-        .localCheckpoint(eager=True)
-    )
-    halo = (
-        eblk.select("src", "blk")
-        .distinct()
-        # re-alias through casts: fresh attribute ids so the downstream
-        # cogroup of eblk with halo-derived q rows is not an ambiguous
-        # self-join in the analyzer
-        .select(
-            F.col("src").cast("long").alias("src"),
-            F.col("blk").cast("long").alias("blk"),
-        )
-        .repartition(n_shuffle, "src")
-        .localCheckpoint(eager=True)
-    )
-    return eblk, halo
-
-
-def spmv_block_gather(eblk: DataFrame, halo: DataFrame, state: DataFrame, value_col: str) -> DataFrame:
-    """Blocked gather with JVM aggregation: halo join ships q values to
-    blocks (co-partitioned with the static edge blocks), the per-block
-    multiply-accumulate stays in whole-stage codegen. Same dataflow as
-    `spmv_csr_gather` minus the Python hop — the production form of the
-    reference's blocked SpMV (ref laplacian.c:68-91)."""
-    qv = state.select(F.col("vid").alias("src"), F.col(value_col).alias("_qv"))
-    qblk = halo.join(qv, "src")
-    return (
-        eblk.join(qblk, ["blk", "src"])
-        .groupBy(F.col("dst").alias("vid"))
-        .agg(F.sum("_qv").alias("_g"))
-    )
-
-
-def spmv_csr_gather(eblk: DataFrame, halo: DataFrame, state: DataFrame, value_col: str) -> DataFrame:
-    """gathered[v] = Σ_{u: (u,v)∈E} state[u] via per-block vectorized
-    numpy (the mat_vec_csr analogue): the halo join ships q values to
-    blocks, then one Arrow-batched cogroup multiplies each block —
-    C-speed bincount instead of a JVM hash aggregate over |E| rows.
-
-    Returns (vid, _g) keyed by destination (vertices with no in-edges
-    absent — same contract as the join-path gather).
-
-    Loop-safety note (measured, root-caused): this plan carries the
-    vertex state on BOTH sides of a join, so a plain localCheckpoint in
-    a driver loop SQUARES the carried Catalyst sizeInBytes estimate each
-    iteration — BigInteger digits double and checkpointing goes
-    geometric after ~18 iterations. The Lanczos loop therefore severs
-    stats with `session.hard_truncate` when this impl is active (cost:
-    one extra exchange per iteration); see that docstring for the full
-    mechanism."""
-    import pandas as pd
-
-    qv = state.select(F.col("vid").alias("src"), F.col(value_col).alias("_qv"))
-    qblk = halo.join(qv, "src")
-
-    def mult(key, epdf: pd.DataFrame, qpdf: pd.DataFrame):
-        import numpy as np
-
-        if epdf.empty or qpdf.empty:
-            return pd.DataFrame({"vid": pd.Series(dtype="int64"), "_g": pd.Series(dtype="float64")})
-        qs = pd.Series(qpdf["_qv"].to_numpy(), index=qpdf["src"].to_numpy())
-        vals = qs.reindex(epdf["src"].to_numpy()).to_numpy()
-        uniq, codes = np.unique(epdf["dst"].to_numpy(), return_inverse=True)
-        g = np.bincount(codes, weights=vals)
-        return pd.DataFrame({"vid": uniq, "_g": g})
-
-    return (
-        eblk.groupby("blk")
-        .cogroup(qblk.groupby("blk"))
-        .applyInPandas(mult, schema="vid long, _g double")
     )
 
 

@@ -38,15 +38,12 @@ from pyspark.sql import functions as F
 
 from parrsb_spark.config import EngineOptions, default_options
 from parrsb_spark.functions.ids import grouped_rank
+from parrsb_spark.functions.loop import spmv_loop
 from parrsb_spark.functions.spmv import symmetrize
-from parrsb_spark.session import hard_truncate as _hard_truncate, iterative_conf
+from parrsb_spark.session import hard_truncate as _hard_truncate
 from parrsb_spark.sources.edges import vertices_from_edges
 
 _EPS = 1e-30
-
-
-def _scalars_df(spark, rows, schema):
-    return F.broadcast(spark.createDataFrame(rows, schema=schema))
 
 
 def _lit_map(d: dict) -> "F.Column":
@@ -192,10 +189,6 @@ def fiedler(
 
     opts = opts or default_options()
     _t_setup = _time.monotonic()
-    if opts.spmv_impl not in ("join", "block", "csr_arrow"):
-        raise ValueError(
-            f"unknown spmv_impl {opts.spmv_impl!r} (join | block | csr_arrow)"
-        )
     spark = edges.sparkSession
     n_shuffle = int(spark.conf.get("spark.sql.shuffle.partitions"))
 
@@ -210,184 +203,123 @@ def fiedler(
     if single_group is not None:
         # one group covering all endpoints (caller contract): the tag is
         # a constant — no edge-side membership joins
-        e = (
-            sym.select(
-                "src", "dst", F.lit(int(single_group)).cast("long").alias("grp")
-            )
-            .repartition(n_shuffle, "src")
-            .sortWithinPartitions("src")
-            .cache()
-        )
+        tagged = sym.select("src", "dst", F.lit(int(single_group)).cast("long").alias("grp"))
     else:
         # intra-group symmetric edges, tagged with grp
         m_src = membership.select(F.col("vid").alias("src"), F.col("grp").alias("g1"))
         m_dst = membership.select(F.col("vid").alias("dst"), F.col("grp").alias("g2"))
-        e = (
+        tagged = (
             sym.join(m_src, "src")
             .join(m_dst, "dst")
             .filter(F.col("g1") == F.col("g2"))
             .select("src", "dst", F.col("g1").alias("grp"))
-            .repartition(n_shuffle, "src")
-            .sortWithinPartitions("src")
-            .cache()
         )
-    deg = e.groupBy(F.col("src").alias("vid")).agg(F.count("*").alias("deg"))
-    # isolated vertices get deg 0 (their fiedler is 0 — they carry no cut info)
-    base = (
-        membership.join(deg, "vid", "left")
-        .select("vid", "grp", F.coalesce("deg", F.lit(0)).cast("double").alias("deg"))
-        .repartition(n_shuffle, "vid")
-        .cache()
-    )
-    grp_stats = base.groupBy("grp").agg(
-        F.count("*").alias("n"), F.max("deg").alias("mx"), F.sum("deg").alias("se")
-    ).collect()
-    sizes = {r["grp"]: r["n"] for r in grp_stats}
-    # measured-skew gate for loop AQE (see session.iterative_conf): on a
-    # hub-free graph AQE is pure per-iteration re-planning overhead
-    # (278 → 97 jobs, 61s → 36s for a 25-iter solve at sf0.1); with a
-    # hub past the salting threshold its skew-join split earns its keep
-    max_deg = max((float(r["mx"] or 0.0) for r in grp_stats), default=0.0)
-    loop_no_aqe = max_deg <= opts.salt_degree_threshold
-    # scale-adaptive Lanczos parallelism (session.loop_partitions): Σdeg
-    # over groups = |e| rows, collected by the same aggregate; re-key the
-    # cached edge side so the per-iteration join stays exchange-free.
-    # No-op (n_loop == n_shuffle) on any cluster-sized input.
-    from parrsb_spark.session import loop_partitions
+    base = None
 
-    n_edge_rows = sum(int(r["se"] or 0) for r in grp_stats)
-    n_loop = loop_partitions(n_edge_rows, n_shuffle)
-    if n_loop != n_shuffle and opts.spmv_impl == "join":
-        e2 = (
-            e.repartition(n_loop, "src").sortWithinPartitions("src").cache()
+    def setup(lp) -> DataFrame:
+        # base = (vid, grp, deg) over the cached edges, cached for the
+        # solve; isolated vertices get deg 0 (their fiedler is 0 — they
+        # carry no cut info). The loop's one setup aggregate reads the
+        # edge rows (Σdeg), the max degree and every group's size off it.
+        nonlocal base
+        deg = lp.edges.groupBy(F.col("src").alias("vid")).agg(F.count("*").alias("deg"))
+        base = lp.cache(
+            membership.join(deg, "vid", "left")
+            .select("vid", "grp", F.coalesce("deg", F.lit(0)).cast("double").alias("deg"))
+            .repartition(n_shuffle, "vid")
         )
-        e2.count()  # materialize from the n_shuffle cache, then free it
-        e.unpersist()
-        e = e2
-
-    # physical SpMV strategy (all three cross-validated by tests/test_spectral.py):
-    #   join      — e ⋈ state + map-side-combined groupBy (default; the
-    #               Catalyst plan is already the distributed-CSR dataflow:
-    #               edges static & cached, combiner local)
-    #   block     — edges pre-partitioned into dst blocks once + halo join
-    #               (ref par_csr_init, src/laplacian.c:68-91), JVM aggregate
-    #   csr_arrow — same blocks, per-block numpy multiply via Arrow cogroup
-    #               (ref mat_vec_csr, src/mat.c:829-846); see the measured
-    #               long-loop caveat in functions/spmv.py
-    eblk = halo = None
-    if opts.spmv_impl in ("block", "csr_arrow"):
-        from parrsb_spark.functions.spmv import (
-            csr_block_setup,
-            spmv_block_gather,
-            spmv_csr_gather,
-        )
-
-        eblk, halo = csr_block_setup(e, n_shuffle)
-        gather = spmv_csr_gather if opts.spmv_impl == "csr_arrow" else spmv_block_gather
-
-        def spmv_fn(state: DataFrame, col: str) -> DataFrame:
-            gathered = gather(eblk, halo, state, col)
-            return (
-                state.join(gathered, "vid", "left")
-                .withColumn("_Lq", F.col("deg") * F.col(col) - F.coalesce("_g", F.lit(0.0)))
-                .drop("_g")
+        return (
+            base.groupBy("grp")
+            .agg(F.count("*").alias("n"), F.max("deg").alias("mx"), F.sum("deg").alias("se"))
+            .agg(
+                F.sum("se").alias("rows"),
+                F.max("mx").alias("max_degree"),
+                F.map_from_entries(F.collect_list(F.struct("grp", "n"))).alias("sizes"),
             )
-
-    else:
-
-        def spmv_fn(state: DataFrame, col: str) -> DataFrame:
-            return _spmv(e, state, col)
-
-    # ---- deterministic init (ref fiedler.c:574-578): rank within group,
-    # +1000*n for the first half — a seeded, reproducible split direction.
-    # Rank is the scale-safe range-partitioned form (grouped_rank), never a
-    # partitionBy(grp) window (whole group in one task). With init_order
-    # (the rsb_pre hook) the rank follows the geometric pre-order.
-    if init_order is not None:
-        ibase = base.join(
-            init_order.select("vid", F.col("ord").alias("_iord")), "vid", "left"
-        ).withColumn("_iord", F.coalesce("_iord", F.lit(0.0)))
-        init = grouped_rank(ibase, "grp", ["_iord", "vid"], "r").drop("_iord")
-    else:
-        init = grouped_rank(base, "grp", ["vid"], "r")
-
-    # init mean/norm are CLOSED FORM — x is a permutation of
-    # {r + 1000n·[r ≤ n/2] : r = 1..n}, so Σx and Σx² follow from n alone
-    # (exact integer arithmetic). Saves the _orthonormalize full-pass job
-    # that round 2 paid at every fiedler() call.
-    mu_d, nrm_d = {}, {}
-    for g, n in sizes.items():
-        h = n // 2
-        sx = n * (n + 1) // 2 + 1000 * n * h
-        sxx = (
-            n * (n + 1) * (2 * n + 1) // 6
-            + 1000 * n * h * (h + 1)
-            + h * (1000 * n) ** 2
         )
-        nrm2 = float(n * sxx - sx * sx) / n if n else 0.0
-        mu_d[g] = sx / n if n else 0.0
-        nrm_d[g] = math.sqrt(nrm2) if nrm2 > _EPS else 1.0
-    init, sc0 = _attach_group_scalars(
-        init,
-        {"n": {g: float(n) for g, n in sizes.items()}, "mu": mu_d, "nrm": nrm_d},
-        threshold=opts.group_scalar_broadcast_threshold,
-    )
-    n_col = sc0["n"]
-    x_col = (
-        F.col("r").cast("double")
-        + F.when(F.col("r") <= n_col / 2, 1000.0 * n_col).otherwise(0.0)
-    )
-    state0 = init.select(
-        "vid", "grp", "deg", ((x_col - sc0["mu"]) / sc0["nrm"]).alias("q")
-    )
-    # Determinize the solve against SESSION HISTORY: grouped_rank's
-    # repartitionByRange samples range boundaries with an RDD-id-seeded
-    # RNG, so state0's physical layout differs between, say, a fresh
-    # resume-from-checkpoint session and a session that just computed the
-    # previous cut — and iteration 0's per-group float sums then
-    # accumulate in a different order, which an unconverged Lanczos
-    # amplifies into a materially different vector (measured: 11% of a
-    # 100k-vertex power-law bisection flipped). The rank VALUES are exact
-    # either way; only the layout leaks. Every in-loop exchange is keyed
-    # (hash partitioning + sort-merge-join ordering), so pinning state0
-    # to hash(vid) with in-partition vid order makes the whole solve —
-    # and therefore a resumed RSB run — replay bit-identically regardless
-    # of what ran earlier in the session (tools/run_submit_smoke.sh).
-    loop_sp = n_loop if opts.spmv_impl == "join" else None
-    state0 = state0.repartition(
-        n_loop if opts.spmv_impl == "join" else n_shuffle, "vid"
-    ).sortWithinPartitions("vid")
-    f_df = None
-    if lineage is not None:
-        lineage.phase_mark("fiedler", "fiedler_setup", level, _time.monotonic() - _t_setup)
-    _w_lanczos = _w_tqli = 0.0
-    _niter = 0
 
-    if opts.rsb_algo == "inverse":
-        # D9-D11: inverse power iteration with MG-preconditioned projected
-        # CG (ref inverse(), src/fiedler.c:189-321; rsb_algo=1)
-        _t0 = _time.monotonic()
-        with iterative_conf(
-            spark,
-            disable_aqe=loop_no_aqe,
-            no_auto_broadcast=True,
-            shuffle_partitions=loop_sp,
-        ):
+    # the driver caches `tagged` sorted on src (re-keyed to the loop
+    # partitions) and `base`, gates AQE on the max degree, scopes the
+    # loop conf around both solves and releases both caches on exit —
+    # the solve's result is an eager checkpoint, so nothing recomputes
+    with spmv_loop(tagged, "src", auto_broadcast=False, probe=setup, opts=opts) as lp:
+        e = lp.edges
+        sizes = lp.stats["sizes"]
+        # ---- deterministic init (ref fiedler.c:574-578): rank within group,
+        # +1000*n for the first half — a seeded, reproducible split direction.
+        # Rank is the scale-safe range-partitioned form (grouped_rank), never a
+        # partitionBy(grp) window (whole group in one task). With init_order
+        # (the rsb_pre hook) the rank follows the geometric pre-order.
+        if init_order is not None:
+            ibase = base.join(
+                init_order.select("vid", F.col("ord").alias("_iord")), "vid", "left"
+            ).withColumn("_iord", F.coalesce("_iord", F.lit(0.0)))
+            init = grouped_rank(ibase, "grp", ["_iord", "vid"], "r").drop("_iord")
+        else:
+            init = grouped_rank(base, "grp", ["vid"], "r")
+
+        # init mean/norm are CLOSED FORM — x is a permutation of
+        # {r + 1000n·[r ≤ n/2] : r = 1..n}, so Σx and Σx² follow from n alone
+        # (exact integer arithmetic). Saves the _orthonormalize full-pass job
+        # that round 2 paid at every fiedler() call.
+        mu_d, nrm_d = {}, {}
+        for g, n in sizes.items():
+            h = n // 2
+            sx = n * (n + 1) // 2 + 1000 * n * h
+            sxx = (
+                n * (n + 1) * (2 * n + 1) // 6
+                + 1000 * n * h * (h + 1)
+                + h * (1000 * n) ** 2
+            )
+            nrm2 = float(n * sxx - sx * sx) / n if n else 0.0
+            mu_d[g] = sx / n if n else 0.0
+            nrm_d[g] = math.sqrt(nrm2) if nrm2 > _EPS else 1.0
+        init, sc0 = _attach_group_scalars(
+            init,
+            {"n": {g: float(n) for g, n in sizes.items()}, "mu": mu_d, "nrm": nrm_d},
+            threshold=opts.group_scalar_broadcast_threshold,
+        )
+        n_col = sc0["n"]
+        x_col = (
+            F.col("r").cast("double")
+            + F.when(F.col("r") <= n_col / 2, 1000.0 * n_col).otherwise(0.0)
+        )
+        state0 = init.select(
+            "vid", "grp", "deg", ((x_col - sc0["mu"]) / sc0["nrm"]).alias("q")
+        )
+        # Determinize the solve against SESSION HISTORY: grouped_rank's
+        # repartitionByRange samples range boundaries with an RDD-id-seeded
+        # RNG, so state0's physical layout differs between, say, a fresh
+        # resume-from-checkpoint session and a session that just computed the
+        # previous cut — and iteration 0's per-group float sums then
+        # accumulate in a different order, which an unconverged Lanczos
+        # amplifies into a materially different vector (measured: 11% of a
+        # 100k-vertex power-law bisection flipped). The rank VALUES are exact
+        # either way; only the layout leaks. Every in-loop exchange is keyed
+        # (hash partitioning + sort-merge-join ordering), so pinning state0
+        # to hash(vid) with in-partition vid order makes the whole solve —
+        # and therefore a resumed RSB run — replay bit-identically regardless
+        # of what ran earlier in the session (tools/run_submit_smoke.sh).
+        state0 = state0.repartition(lp.partitions, "vid").sortWithinPartitions("vid")
+        f_df = None
+        if lineage is not None:
+            lineage.phase_mark("fiedler", "fiedler_setup", level, _time.monotonic() - _t_setup)
+        _w_lanczos = _w_tqli = 0.0
+        _niter = 0
+
+        if opts.rsb_algo == "inverse":
+            # D9-D11: inverse power iteration with MG-preconditioned projected
+            # CG (ref inverse(), src/fiedler.c:189-321; rsb_algo=1)
+            _t0 = _time.monotonic()
             f_df = _inverse_driver(spark, e, base, sizes, opts, state0)
-        _w_lanczos = _time.monotonic() - _t0
-        _niter = opts.rsb_max_iter
-    elif opts.rsb_algo == "lanczos":
-        state = _fresh_state(state0)
-        passes = max(1, opts.rsb_max_passes)
-        with iterative_conf(
-            spark,
-            disable_aqe=loop_no_aqe,
-            no_auto_broadcast=True,
-            shuffle_partitions=loop_sp,
-        ):
+            _w_lanczos = _time.monotonic() - _t0
+            _niter = opts.rsb_max_iter
+        elif opts.rsb_algo == "lanczos":
+            state = _fresh_state(state0)
+            passes = max(1, opts.rsb_max_passes)
             for pss in range(passes):
                 _t0 = _time.monotonic()
-                state, alphas, betas, updates = _lanczos_pass(spmv_fn, state, sizes, opts)
+                state, alphas, betas, updates = _lanczos_pass(e, state, sizes, opts)
                 _w_lanczos += _time.monotonic() - _t0
                 _niter += max((len(v) for v in alphas.values()), default=0)
                 _t0 = _time.monotonic()
@@ -399,7 +331,7 @@ def fiedler(
                     # bench config rsb_max_passes=1 always takes this exit)
                     break
                 # residual check per group: ||L f - lambda f||
-                res = _residuals(spmv_fn, e, f_df)
+                res = _residuals(e, base, f_df)
                 if all(r < opts.rsb_tol for r in res.values()):
                     break
                 # restart with f as the new initial vector (ref fiedler.c:529)
@@ -408,8 +340,8 @@ def fiedler(
                     .select("vid", "grp", "deg", F.coalesce("x", F.lit(0.0)).alias("x"))
                 )
                 state = _fresh_state(_orthonormalize(state, "x", "q"))
-    else:
-        raise ValueError(f"unknown rsb_algo {opts.rsb_algo!r} (lanczos | inverse)")
+        else:
+            raise ValueError(f"unknown rsb_algo {opts.rsb_algo!r} (lanczos | inverse)")
 
     if lineage is not None:
         # lanczos = the iterative solve (RSB_LANCZOS; the inverse path's
@@ -441,11 +373,6 @@ def fiedler(
         out = out.join(F.broadcast(signs), "grp").select(
             "vid", "grp", (F.col("fiedler") * F.col("sgn")).alias("fiedler")
         )
-    e.unpersist()
-    base.unpersist()
-    if eblk is not None:
-        eblk.unpersist()
-        halo.unpersist()
     return out
 
 
@@ -769,7 +696,6 @@ def _inverse_driver(spark, e, base, sizes, opts, state0) -> DataFrame:
             # inverse() returns the solve output y, not z).
             z, zbasis, gram_M = _grammian_refine(lap_apply, z, zbasis, gram_M, groups)
 
-    h.unpersist()
     # back to vids, unit-norm per group
     out = f.join(ridmap, ["grp", "r"]).select("vid", "grp", F.col("z").alias("fiedler"))
     nrm = _group_scalars(out, {"nn": F.sum(F.col("fiedler") ** 2)})
@@ -896,7 +822,7 @@ def _fresh_state(st: DataFrame) -> DataFrame:
     )
 
 
-def _lanczos_pass(spmv_fn, state, sizes, opts):
+def _lanczos_pass(e, state, sizes, opts):
     """Deferred-normalization Lanczos: the basis vector u is carried
     UNNORMALIZED, and each iteration's single reduction measures its
     norm β = ‖u‖ DIRECTLY (Σu²) alongside the Rayleigh α = ⟨Lu,u⟩/⟨u,u⟩
@@ -949,23 +875,16 @@ def _lanczos_pass(spmv_fn, state, sizes, opts):
     for j in range(miter):
         if not any(active.values()):
             break
-        st = spmv_fn(state, "u")  # _Lq = L·u
-        # Checkpoint the SpMV RESULT (lazily — the very next reduction
-        # job materializes it), and derive the next state as a NARROW
-        # projection over those persisted blocks. Round 5 checkpointed
-        # the post-update state instead, so every iteration's
+        # _Lq = L·u. Checkpoint the SpMV RESULT (lazily — the very next
+        # reduction job materializes it), and derive the next state as a
+        # NARROW projection over those persisted blocks. Round 5
+        # checkpointed the post-update state instead, so every iteration's
         # gather-scatter executed TWICE: once under this reduction's
         # collect, and again when the next iteration materialized the
         # state checkpoint (separate actions plan separate exchanges —
         # guide §2.4's "remove shuffles outright", here a whole
         # duplicated shuffle pair per iteration).
-        if opts.spmv_impl == "csr_arrow":
-            # cogroup plans carry the state on both join sides — sever
-            # stats fully or the carried sizeInBytes squares per
-            # iteration (see session.hard_truncate)
-            st = _hard_truncate(st)
-        else:
-            st = st.localCheckpoint(eager=False)
+        st = _spmv(e, state, "u").localCheckpoint(eager=False)
         # ONE reduction per iteration (the single comm_allreduce analogue)
         a_rows = {
             r["grp"]: r
@@ -1095,15 +1014,14 @@ def _recombine(spark, state, alphas, betas, sizes, updates, opts=None) -> DataFr
     )
 
 
-def _residuals(spmv_fn, e, f_df) -> dict[int, float]:
+def _residuals(e, base, f_df) -> dict[int, float]:
     """Per-group ||L f − λ f||₂ with λ = Rayleigh quotient fᵀLf (f unit).
-    The convergence gate of ref check_rsb_partition (src/rsb.c:61-111)."""
-    st = f_df.select("vid", "grp", F.col("fiedler").alias("q"))
-    deg = (
-        e.groupBy(F.col("src").alias("vid")).agg(F.count("*").alias("deg"))
+    The convergence gate of ref check_rsb_partition (src/rsb.c:61-111).
+    Degrees come from the solve's cached `base` (vid, grp, deg)."""
+    st = f_df.select("vid", "grp", F.col("fiedler").alias("q")).join(
+        base.select("vid", "deg"), "vid"
     )
-    st = st.join(deg, "vid", "left").withColumn("deg", F.coalesce("deg", F.lit(0)).cast("double"))
-    lf = spmv_fn(st, "q")
+    lf = _spmv(e, st, "q")
     rows = (
         lf.groupBy("grp")
         .agg(

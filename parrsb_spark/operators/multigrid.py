@@ -57,11 +57,6 @@ class MGHierarchy:
         self.tail = tail
         self.factor = factor
 
-    def unpersist(self):
-        for lvl in self.levels:
-            lvl["off"].unpersist()
-            lvl["diag"].unpersist()
-
 
 def mg_setup(
     lap_off: DataFrame,

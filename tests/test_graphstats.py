@@ -91,3 +91,23 @@ def test_reciprocity_mixed_exact_fraction(spark):
     )  # self-loop dropped
     r = _row(reciprocity(e))
     assert (r["m"], r["recip"], r["r"]) == (4, 2, 0.5)
+
+
+@pytest.mark.parametrize("ansi", ["true", "false"])
+def test_checked_long_raises_past_int64(spark, ansi):
+    """The assortativity query surface's bigint cast raises past int64
+    whatever the ANSI setting, and passes in-range values unchanged."""
+    from decimal import Decimal
+
+    from parrsb_spark.entry_queries import checked_long
+
+    prev = spark.conf.get("spark.sql.ansi.enabled")
+    spark.conf.set("spark.sql.ansi.enabled", ansi)
+    try:
+        big = spark.createDataFrame([(Decimal(2**63),)], "s decimal(38,0)")
+        with pytest.raises(Exception, match="outside the bigint range"):
+            big.select(checked_long("s")).collect()
+        ok = spark.createDataFrame([(Decimal(2**63 - 1),)], "s decimal(38,0)")
+        assert ok.select(checked_long("s")).collect()[0]["s"] == 2**63 - 1
+    finally:
+        spark.conf.set("spark.sql.ansi.enabled", prev)

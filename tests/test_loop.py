@@ -24,11 +24,13 @@ from parrsb_spark.operators.anf import (
 from parrsb_spark.operators.bfs import bfs_distances
 from parrsb_spark.operators.components import connected_components
 from parrsb_spark.operators.coreness import coreness
+from parrsb_spark.operators.fiedler import fiedler
 from parrsb_spark.operators.hits import hits
 from parrsb_spark.operators.katz import katz_centrality
 from parrsb_spark.operators.kcore import kcore
 from parrsb_spark.operators.labelprop import label_propagation
 from parrsb_spark.operators.pagerank import pagerank, personalized_pagerank
+from parrsb_spark.operators.rsb import rsb_partition
 from parrsb_spark.operators.sssp import sssp
 
 # every key session.iterative_conf can set
@@ -90,6 +92,10 @@ def _seeds(spark):
     return spark.createDataFrame([(1,), (7,)], "vid long")
 
 
+def _rsb_opts():
+    return EngineOptions(rsb_max_iter=5, rsb_max_passes=2, rsb_tol=0.0, verbose=0)
+
+
 KERNELS = {
     "pagerank": lambda e, s: pagerank(e, fixed_iters=3),
     "pagerank_converge": lambda e, s: pagerank(e, tol=1e-4, max_iter=4),
@@ -107,6 +113,8 @@ KERNELS = {
     "anf_masks": lambda e, s: anf_masks(e, n_hops=3),
     "neighborhood_function": lambda e, s: neighborhood_function(e, max_hops=3),
     "harmonic_centrality_estimates": lambda e, s: harmonic_centrality_estimates(e, max_hops=3),
+    "fiedler": lambda e, s: fiedler(e, opts=_rsb_opts()),
+    "rsb_partition": lambda e, s: rsb_partition(e, 2, opts=_rsb_opts()),
 }
 
 
@@ -118,3 +126,23 @@ def test_ported_kernel_leaves_nothing_cached(spark, powerlaw, name):
     assert _conf(spark) == before
     rows = out if isinstance(out, list) else out.collect()
     assert len(rows) > 0
+
+
+def test_fiedler_solve_error_restores_conf_and_releases_caches(spark, powerlaw, monkeypatch):
+    """A failure inside the Lanczos solve still restores the session
+    conf and releases the solve's edge and vertex caches."""
+    import importlib
+
+    # the operators package re-exports the fiedler FUNCTION over the
+    # submodule name, so a plain `import ... as fmod` binds the function
+    fmod = importlib.import_module("parrsb_spark.operators.fiedler")
+
+    def boom(*args, **kwargs):
+        raise RuntimeError("lanczos failed")
+
+    monkeypatch.setattr(fmod, "_lanczos_pass", boom)
+    before = _conf(spark)
+    with pytest.raises(RuntimeError, match="lanczos failed"):
+        fiedler(powerlaw, opts=_rsb_opts())
+    assert _conf(spark) == before
+    assert _cache_empty(spark)

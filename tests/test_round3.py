@@ -1,7 +1,8 @@
 """Round-3 features: scale-safe grouped rank, struct orientation keys,
 chunk-salted mirror pairs, wired EngineOptions (partitioner dispatch,
-rsb_pre, repair, hub salting, broadcast gate), adaptive fuzzy tolerance
-(C2), and the ngram small-corpus cap guard."""
+repair, hub salting, broadcast gate), adaptive fuzzy tolerance (C2), and
+the ngram small-corpus cap guard. The spectral/RSB cases live in
+test_spectral.py."""
 
 import pytest
 from pyspark.sql import Window
@@ -67,33 +68,6 @@ def test_no_whole_group_window_in_flagship_plans(spark):
         for line in plan.splitlines():
             if "row_number()" in line and "windowspecdefinition" in line:
                 assert re.search(r"_pid#\d+", line), f"whole-group window: {line[:200]}"
-
-
-# ---------------------------------------------------------------------------
-# the round-3 eigensolver regression: subspace-transition survival
-
-
-def test_fiedler_subspace_transition_48x32(spark):
-    """REGRESSION (latent since round 1, found round 3): on a 48×32 grid
-    the row-major rank init is y-dominated; the y-subspace exhausts at
-    Lanczos iter ~15 and the true Fiedler (x-)mode enters at ~1e-7·‖w‖.
-    The one-pass identity β² = ‖w‖²−α²−n·μ² zeroed that direction and
-    converged to the WRONG eigenvector (the y-mode — unit norm, perfect
-    balance, corr 0.0 with the truth). The deferred-normalization
-    Lanczos (direct β = ‖u‖ in the same single reduction) must recover
-    corr ≈ 1 with the analytic Fiedler vector cos(π(x+½)/48)."""
-    import numpy as np
-
-    nx, ny = 48, 32
-    df = graphs.to_df(spark, graphs.grid2d(nx, ny)[0])
-    opts = EngineOptions(rsb_max_iter=50, rsb_max_passes=1, rsb_tol=1e-7)
-    f = {r["vid"]: r["fiedler"] for r in fiedler(df, opts=opts).collect()}
-    v = np.array([f[i + 1] for i in range(nx * ny)])
-    xs = np.array([i % nx for i in range(nx * ny)])
-    true = np.cos(np.pi * (xs + 0.5) / nx)
-    true -= true.mean()
-    true /= np.linalg.norm(true)
-    assert abs(v @ true) > 0.9999
 
 
 # ---------------------------------------------------------------------------
@@ -214,25 +188,6 @@ def test_partition_graph_dispatch(spark):
         partition_graph(2, edges=edf, opts=EngineOptions(partitioner="metis"))
 
 
-@pytest.mark.parametrize("pre", [1, 2])
-def test_rsb_pre_geometric_init(spark, pre):
-    """rsb_pre with coords: RCB/RIB-ordered init must reach the same
-    quality/balance as the vid-ordered init on the uniform grid."""
-    edges, coords = graphs.grid2d(4, 4)
-    edf, cdf = graphs.to_df(spark, edges), graphs.coords_to_df(spark, coords)
-    opts = EngineOptions(rsb_pre=pre, rsb_max_iter=40, rsb_max_passes=5, rsb_tol=1e-8)
-    parts = rsb_partition(edf, 4, opts=opts, coords=cdf)
-    sizes = sorted(r["n"] for r in partition_sizes(parts).collect())
-    assert sizes == [4, 4, 4, 4]
-    assert edge_cut(edf, parts) <= 8
-
-
-def test_spmv_impl_unknown_raises(spark):
-    df = graphs.to_df(spark, graphs.grid2d(3, 3)[0])
-    with pytest.raises(ValueError, match="spmv_impl"):
-        fiedler(df, opts=EngineOptions(spmv_impl="csr"))
-
-
 def test_engine_options_all_consumed():
     """No dead knobs: every EngineOptions field must be read as an
     ATTRIBUTE somewhere in the package (the round-2 finding was six
@@ -251,61 +206,6 @@ def test_engine_options_all_consumed():
         assert re.search(rf"\.{f.name}\b", src), (
             f"EngineOptions.{f.name} is consumed nowhere"
         )
-
-
-# ---------------------------------------------------------------------------
-# grammian Rayleigh–Ritz refinement (inverse path, ref fiedler.c:250-305)
-
-
-def test_inverse_grammian_distributed_matches_numpy(spark):
-    """Distributed grammian Rayleigh–Ritz refinement (rsb_mg_grammian=1,
-    ref fiedler.c:250-305) must reproduce the serial reference arithmetic
-    step-for-step: mpass=3, miter=3, tol=0 → exactly 3 PCG steps per pass
-    and 2 refinements on both sides (same fixed-step protocol as
-    test_inverse_distributed_pcg_matches_numpy)."""
-    import numpy as np
-
-    from parrsb_spark.operators.multigrid import np_inverse_fiedler
-
-    n = 12
-    edges = [(i, i + 1) for i in range(1, n)]
-    df = graphs.to_df(spark, edges)
-    opts = EngineOptions(
-        rsb_max_iter=3, rsb_max_passes=3, rsb_tol=0.0,
-        rsb_algo="inverse", rsb_mg_grammian=1, mg_tail_threshold=4,
-    )
-    got = {r["vid"]: r["fiedler"] for r in fiedler(df, opts=opts, sign_fix=False).collect()}
-    A = np.zeros((n, n))
-    for u, v in edges:
-        A[u - 1, u - 1] += 1
-        A[v - 1, v - 1] += 1
-        A[u - 1, v - 1] -= 1
-        A[v - 1, u - 1] -= 1
-    z = np.arange(1, n + 1, dtype=float)
-    z[: n // 2] += 1000 * n
-    z = z - z.mean()
-    z = z / np.linalg.norm(z)
-    exp = np_inverse_fiedler(A, z, 3, 3, 0.0, 2, grammian=True)
-    exp = exp / np.linalg.norm(exp)
-    assert max(abs(got[i + 1] - exp[i]) for i in range(n)) < 1e-8
-    # and the refinement genuinely changed the trajectory vs grammian off
-    exp_off = np_inverse_fiedler(A, z, 3, 3, 0.0, 2, grammian=False)
-    exp_off = exp_off / np.linalg.norm(exp_off)
-    assert max(abs(exp[i] - exp_off[i]) for i in range(n)) > 1e-9
-
-
-def test_inverse_grammian_tail_path_smoke(spark):
-    """Grammian flag on the collected numpy-tail path (the default
-    mg_tail_threshold route) still cuts the two-clique bridge."""
-    edges = graphs.two_cliques_bridge(6)
-    df = graphs.to_df(spark, edges)
-    opts = EngineOptions(
-        rsb_algo="inverse", rsb_mg_grammian=1,
-        rsb_max_iter=40, rsb_max_passes=20, rsb_tol=1e-8,
-    )
-    parts = rsb_partition(df, 2, opts=opts)
-    assert edge_cut(df, parts) == 1
-    assert sorted(r["n"] for r in partition_sizes(parts).collect()) == [6, 6]
 
 
 # ---------------------------------------------------------------------------

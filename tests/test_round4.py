@@ -1,73 +1,13 @@
-"""Round-4 fixes: per-group degenerate guard in the grammian refinement,
-byte-gated similarity broadcasts (ann fallback path), NEIGHBOR_MAP
-topology option for min_neighbor_distance, conf restoration on
-labelprop failure, and PageRank default-armed hub salting."""
+"""Round-4 fixes: byte-gated similarity broadcasts (ann fallback path),
+NEIGHBOR_MAP topology option for min_neighbor_distance, conf restoration
+on labelprop failure, and PageRank default-armed hub salting. The
+spectral/RSB cases live in test_spectral.py."""
 
 import numpy as np
 import pytest
-from pyspark.sql import functions as F
 
 from parrsb_spark import graphs
-from parrsb_spark.config import EngineOptions
 from parrsb_spark.functions.ids import grouped_rank
-from parrsb_spark.operators.fiedler import fiedler
-
-
-# ---------------------------------------------------------------------------
-# grammian: per-group degeneracy (ADVICE r3 medium)
-
-
-def test_grammian_mixed_degenerate_groups(spark):
-    """One group's iterate falls into span(Z) (a 2-vertex path converges
-    to its exact Fiedler vector after one pass) while another is still
-    live. The dead group must keep its z/basis/M untouched — appending
-    its ~zero residual would hand M a ~0 eigenvalue and collapse the
-    restart to noise. Both groups must match the serial reference
-    arithmetic (np_inverse_fiedler) per group."""
-    from parrsb_spark.operators.multigrid import np_inverse_fiedler
-
-    n_b = 12
-    edges_a = [(1, 2)]
-    edges_b = [(100 + i, 100 + i + 1) for i in range(1, n_b)]
-    df = graphs.to_df(spark, edges_a + edges_b)
-    membership = spark.createDataFrame(
-        [(1, 0), (2, 0)] + [(100 + i, 1) for i in range(1, n_b + 1)],
-        schema="vid long, grp long",
-    )
-    opts = EngineOptions(
-        rsb_max_iter=3, rsb_max_passes=4, rsb_tol=0.0,
-        rsb_algo="inverse", rsb_mg_grammian=1, mg_tail_threshold=4,
-    )
-    got = {
-        r["vid"]: (r["grp"], r["fiedler"])
-        for r in fiedler(df, membership=membership, opts=opts, sign_fix=False).collect()
-    }
-
-    def np_group(n, edge_list, base_vid):
-        A = np.zeros((n, n))
-        for u, v in edge_list:
-            i, j = u - base_vid, v - base_vid
-            A[i, i] += 1
-            A[j, j] += 1
-            A[i, j] -= 1
-            A[j, i] -= 1
-        z = np.arange(1, n + 1, dtype=float)
-        z[: n // 2] += 1000 * n
-        z = z - z.mean()
-        z = z / np.linalg.norm(z)
-        out = np_inverse_fiedler(A, z, 3, 4, 0.0, 2, grammian=True)
-        return out / np.linalg.norm(out)
-
-    exp_a = np_group(2, edges_a, 1)
-    exp_b = np_group(n_b, edges_b, 101)
-    for i in range(2):
-        assert got[1 + i][0] == 0
-        assert abs(got[1 + i][1] - exp_a[i]) < 1e-8
-    for i in range(n_b):
-        assert got[101 + i][0] == 1
-        assert abs(got[101 + i][1] - exp_b[i]) < 1e-8
-    # sanity: the tiny group really does produce a valid ±1/√2 split vector
-    assert abs(abs(got[1][1]) - 1 / np.sqrt(2)) < 1e-9
 
 
 # ---------------------------------------------------------------------------
@@ -135,48 +75,6 @@ def test_min_neighbor_distance_topology_on_degenerate_element(spark):
 
 
 # ---------------------------------------------------------------------------
-# group scalars: literal-map vs broadcast-join physical paths (VERDICT r3 #2)
-
-
-def test_group_scalar_broadcast_path_identical_fiedler(spark, monkeypatch):
-    """Forcing the broadcast-join scalars path (threshold 0) must produce
-    bit-identical Fiedler vectors to the literal-map default, across a
-    multi-group membership (covers init, the Lanczos loop, recombine and
-    sign fix)."""
-    edges, _ = graphs.grid2d(8, 6)
-    df = graphs.to_df(spark, edges)
-    membership = spark.createDataFrame(
-        [(v, v % 3) for v in range(1, 49)], schema="vid long, grp long"
-    )
-    opts = EngineOptions(rsb_max_iter=30, rsb_max_passes=1, rsb_pre=0)
-    lit = {(r["vid"], r["grp"]): r["fiedler"]
-           for r in fiedler(df, membership=membership, opts=opts).collect()}
-    monkeypatch.setenv("PARRSB_SPARK_GROUP_SCALAR_BROADCAST_THRESHOLD", "0")
-    opts_b = EngineOptions(rsb_max_iter=30, rsb_max_passes=1, rsb_pre=0)
-    assert opts_b.group_scalar_broadcast_threshold == 0
-    bc = {(r["vid"], r["grp"]): r["fiedler"]
-          for r in fiedler(df, membership=membership, opts=opts_b).collect()}
-    assert lit.keys() == bc.keys()
-    for k in lit:
-        assert lit[k] == bc[k], k  # same arithmetic, same order → bit-equal
-
-
-def test_group_scalar_broadcast_path_identical_rsb(spark, monkeypatch):
-    """rsb_partition(k=4) end-to-end equality across both scalar paths
-    (covers the grouped multi-cut driver and the tie-break band)."""
-    from parrsb_spark.operators.rsb import rsb_partition
-
-    edges, _ = graphs.grid2d(8, 4)
-    df = graphs.to_df(spark, edges)
-    opts = EngineOptions(rsb_max_iter=40, rsb_max_passes=2, rsb_pre=0, verbose=0)
-    a = {r["vid"]: r["part"] for r in rsb_partition(df, 4, opts=opts).collect()}
-    monkeypatch.setenv("PARRSB_SPARK_GROUP_SCALAR_BROADCAST_THRESHOLD", "0")
-    opts_b = EngineOptions(rsb_max_iter=40, rsb_max_passes=2, rsb_pre=0, verbose=0)
-    b = {r["vid"]: r["part"] for r in rsb_partition(df, 4, opts=opts_b).collect()}
-    assert a == b
-
-
-# ---------------------------------------------------------------------------
 # pagerank: hub salting armed by default (VERDICT r3 wrong #2)
 
 
@@ -195,38 +93,6 @@ def test_pagerank_default_salting_no_opts(spark, monkeypatch):
     assert plain.keys() == salted.keys()
     for v in plain:
         assert abs(plain[v] - salted[v]) < 1e-12
-
-
-# ---------------------------------------------------------------------------
-# rsb resume-from-checkpoint (VERDICT r3 directive 5, SURVEY §7 M3)
-
-
-def test_rsb_resumable_kill_after_cut1(spark, tmp_path):
-    """Interrupt after cut 0 (max_cuts=1 with durable snapshots), then
-    resume with the same ckpt_dir: the resumed run must skip cut 0 (its
-    snapshot is trusted) and produce the exact part map of an
-    uninterrupted run."""
-    from parrsb_spark.operators.rsb import rsb_partition, rsb_resumable
-
-    edges, _ = graphs.grid2d(8, 4)
-    df = graphs.to_df(spark, edges)
-    mkopts = lambda: EngineOptions(rsb_max_iter=40, rsb_max_passes=2, rsb_pre=0, verbose=0)
-    full = {r["vid"]: r["part"] for r in rsb_partition(df, 4, opts=mkopts()).collect()}
-
-    d = str(tmp_path / "ck")
-    partial = rsb_partition(df, 4, opts=mkopts(), ckpt_dir=d, max_cuts=1)
-    assert {r["part"] for r in partial.select("part").distinct().collect()} == {0, 1}
-    resumed = {r["vid"]: r["part"] for r in rsb_resumable(df, 4, d, opts=mkopts()).collect()}
-    assert resumed == full
-    # the resume really started past cut 0: lineage holds cuts 0 and 1
-    from parrsb_spark.plans.lineage import LineageLog
-
-    lin = LineageLog(spark, d).read()
-    iters = sorted(r["iteration"] for r in lin.select("iteration").distinct().collect())
-    assert iters == [0, 1]
-    # and a third run over a COMPLETE checkpoint tree is a pure replay
-    again = {r["vid"]: r["part"] for r in rsb_resumable(df, 4, d, opts=mkopts()).collect()}
-    assert again == full
 
 
 # ---------------------------------------------------------------------------

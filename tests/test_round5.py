@@ -1,5 +1,5 @@
-"""Round-5 regressions: hub-safe labelprop argmax, broadcast-path
-boundary tie-break, fused CG reductions, multi-table ANN recall."""
+"""Round-5 regressions: hub-safe labelprop argmax, multi-table ANN
+recall. The spectral/RSB cases live in test_spectral.py."""
 
 from pyspark.sql import functions as F
 
@@ -21,120 +21,6 @@ def test_labelprop_star_hub_matches_oracle(spark):
     df = graphs.to_df(spark, edges)
     got = {r["vid"]: r["label"] for r in label_propagation(df, n_iter=3).collect()}
     assert got == labelprop_np(edges, n_iter=3)
-
-
-# ---------------------------------------------------------------------------
-# boundary tie-break: broadcast scalar path == literal path
-
-
-def _tied_fixture(spark, n_groups):
-    """n_groups groups of 4 vertices each, fiedler = [0,1,1,2] → the
-    boundary pair (ranks 2,3) ties in EVERY group. Edges make the
-    cut-aware score decisive: v1–v3 (fixed half 1) and v2–v0 (fixed
-    half 0), so the tie-break must flip the vid-order default and put
-    v2, not v1, into half 0."""
-    rows, erows = [], []
-    for g in range(n_groups):
-        b = g * 10
-        for i, (f, rn) in enumerate([(0.0, 1), (1.0, 2), (1.0, 3), (2.0, 4)]):
-            rows.append((g, b + i, f, rn, 2))
-        erows += [(b + 1, b + 3), (b + 3, b + 1), (b + 2, b + 0), (b + 0, b + 2)]
-    ranked = spark.createDataFrame(
-        rows, schema="grp long, vid long, fiedler double, rn long, target0 long"
-    )
-    sym = spark.createDataFrame(erows, schema="src long, dst long")
-    assigned = ranked.select(
-        "vid", "grp", "fiedler", "rn",
-        F.when(F.col("rn") <= F.col("target0"), 0).otherwise(1).alias("half"),
-    )
-    return sym, ranked, assigned
-
-
-def test_tie_break_broadcast_path_matches_literal(spark):
-    """64 groups ALL tied at the boundary: the broadcast scalar path
-    (threshold=1) must keep every untied row (how='left' — an inner
-    join would drop them) and produce the identical assignment to the
-    literal-map path."""
-    from parrsb_spark.operators.rsb import _tie_break_boundary
-
-    sym, ranked, assigned = _tied_fixture(spark, 64)
-    out = {}
-    for name, thr in (("literal", 10**6), ("broadcast", 1)):
-        res = _tie_break_boundary(sym, ranked, assigned, threshold=thr)
-        out[name] = sorted(
-            (r["grp"], r["vid"], r["half"]) for r in res.collect()
-        )
-    assert out["literal"] == out["broadcast"]
-    assert len(out["broadcast"]) == 64 * 4  # no rows lost to the inner join
-    by_gv = {(g, v): h for g, v, h in out["broadcast"]}
-    for g in (0, 17, 63):
-        b = g * 10
-        # score-aware pick: v2 (neighbor fixed in half 0) wins the quota
-        assert by_gv[(g, b + 2)] == 0 and by_gv[(g, b + 1)] == 1
-        assert by_gv[(g, b + 0)] == 0 and by_gv[(g, b + 3)] == 1
-
-
-def test_rsb_broadcast_scalars_end_to_end_identical(spark):
-    """rsb_partition with group_scalar_broadcast_threshold=1 (every
-    per-group scalar rides the broadcast join, including the tie-break's)
-    must emit the identical part map to the literal-map default on a
-    symmetric grid — the graph family that actually ties at boundaries."""
-    from parrsb_spark.config import EngineOptions
-    from parrsb_spark.operators.rsb import rsb_partition
-
-    df = graphs.to_df(spark, graphs.grid2d(6, 4)[0])
-    base = EngineOptions(rsb_max_iter=20, rsb_max_passes=2, rsb_tol=1e-5)
-    bcast = EngineOptions(
-        rsb_max_iter=20, rsb_max_passes=2, rsb_tol=1e-5,
-        group_scalar_broadcast_threshold=1,
-    )
-    lit_map = {r["vid"]: r["part"] for r in rsb_partition(df, 4, opts=base).collect()}
-    bc_map = {r["vid"]: r["part"] for r in rsb_partition(df, 4, opts=bcast).collect()}
-    assert lit_map == bc_map
-
-
-# ---------------------------------------------------------------------------
-# inverse/CG path: two scalar collects per iteration (Lanczos parity)
-
-
-def test_cg_two_collects_per_iteration(spark, monkeypatch):
-    """The PCG loop pays exactly TWO _group_scalars reductions per
-    iteration — the two CG fundamentally needs (alpha's p·Lp, beta's
-    r·z) — with ‖r‖², the ortho mean, and the Polak–Ribière terms fused
-    into them. The FINAL fixed-step iteration pays only the alpha
-    aggregate: the beta aggregate (like its V-cycle) only prepares a
-    next direction that no longer exists. Fixed-step protocol (tol=0 →
-    no early break) makes the count deterministic:
-      1 (fused setup rr/mu/rz)
-    + 2·miter − 1 (alpha agg per iteration + beta agg per non-final one)
-    + 2 (outer update: ortho mean + norm)
-    + 1 (final output norm)
-    """
-    import importlib
-
-    # the operators package re-exports the fiedler FUNCTION over the
-    # submodule name, so a plain `import ... as fmod` binds the function
-    fmod = importlib.import_module("parrsb_spark.operators.fiedler")
-    from parrsb_spark.config import EngineOptions
-
-    fiedler = fmod.fiedler
-
-    calls = []
-    orig = fmod._group_scalars
-
-    def counting(df, exprs):
-        calls.append(sorted(exprs))
-        return orig(df, exprs)
-
-    monkeypatch.setattr(fmod, "_group_scalars", counting)
-    df = graphs.to_df(spark, [(i, i + 1) for i in range(1, 12)])
-    miter = 4
-    opts = EngineOptions(
-        rsb_max_iter=miter, rsb_max_passes=1, rsb_tol=0.0,
-        rsb_algo="inverse", mg_tail_threshold=4,
-    )
-    fiedler(df, opts=opts).count()
-    assert len(calls) == 1 + (2 * miter - 1) + 2 + 1, calls
 
 
 # ---------------------------------------------------------------------------
