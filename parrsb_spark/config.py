@@ -11,11 +11,12 @@ Every field here is CONSUMED somewhere (no dead knobs):
 - repair       → operators/rsb.py `_repair_parts`
 - verbose      → operators/rsb.py per-cut progress prints
 - rsb_*        → operators/fiedler.py / rsb.py
-- salt_degree_threshold   → functions/loop.py: the SpMV loop driver keeps
-               AQE on only past this max degree (every SpMV loop);
-               pagerank's salted hub aggregation
-- loop_rows_per_task       → functions/loop.py (via session.loop_partitions):
-               loop parallelism of every SpMV loop
+- salt_degree_threshold   → functions/loop.py: the loop driver keeps AQE
+               on only past this max degree (every driver-loop kernel:
+               the SpMV kernels, coloring, mis, matching, betweenness,
+               scc/condensation/bowtie); pagerank's salted hub aggregation
+- loop_rows_per_task       → functions/loop.py `loop_partitions`: loop
+               parallelism of every driver-loop kernel
 - broadcast_threshold_rows / broadcast_threshold_mb
                → operators/similarity.py query-side broadcast gate
 - group_scalar_broadcast_threshold
@@ -77,7 +78,7 @@ class EngineOptions:
                                        # scalars DF per update (plan size stays
                                        # flat at deep RSB cuts)
     loop_rows_per_task: int = 65536    # target edge rows per task inside
-                                       # iterative loops (session.loop_partitions):
+                                       # iterative loops (functions/loop.py):
                                        # loop parallelism = min(session shuffle
                                        # partitions, ceil(edges / this)) — the
                                        # session conf caps it, so a cluster-sized

@@ -28,8 +28,8 @@ Scale design:
 - backward: per level ONE three-way join building the DAG edges
   (settled level h-1 ⋈ edges ⋈ settled level h, all keyed with s) +
   the ordered fold per (s, u). The fold collects ≤ out-degree(u)
-  successor structs; past `FOLD_CAP` (one max-out-degree probe gates
-  it) the fold runs two-level so no row materializes an unbounded
+  successor structs; past `FOLD_CAP` (the loop driver's max-degree
+  probe gates it) the fold runs two-level so no row materializes an unbounded
   array — the 10^8-degree mid-DAG hub hazard is enforced in code
   (round 6), not just documented.
 - `localCheckpoint` per level truncates lineage; the settled/delta
@@ -45,8 +45,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from parrsb_spark.functions.loop import spmv_loop
 from parrsb_spark.functions.spmv import symmetrize
-from parrsb_spark.session import iterative_conf
 
 
 #: Per-(s, u) successor-array cap for the backward ordered fold: below
@@ -102,26 +102,20 @@ def _ordered_fold_delta(terms: DataFrame, two_level: bool) -> DataFrame:
     )
 
 
-def _brandes_passes(e: DataFrame, sources: DataFrame, max_hops: int):
-    """Shared forward+backward Brandes machinery. Returns
-    (delta_levels, term_levels): per-level vertex dependencies
-    (s, vid, delta) and per-level DAG-edge terms
-    (s, u, v, term) with term = σ_u/σ_v · (1 + δ_v) — the edge's
+def _brandes_passes(edges: DataFrame, sources: DataFrame, max_hops: int):
+    """Shared forward+backward Brandes machinery over `edges` (src, dst),
+    run through the loop driver. Returns (delta_levels, term_levels):
+    per-level vertex dependencies (s, vid, delta) and per-level DAG-edge
+    terms (s, u, v, term) with term = σ_u/σ_v · (1 + δ_v) — the edge's
     dependency contribution, which vertex betweenness folds per (s, u)
     and edge betweenness (Girvan–Newman) folds per canonical edge.
 
     FOLD_CAP bounds the per-(s, u) successor array of the backward
-    fold: the gate is ONE max-out-degree probe on the cached edge set,
-    and only graphs with a hub past the cap take the two-level fold
-    path, which buckets by the same FOLD_CAP."""
-    spark = e.sparkSession
-    # one bounded probe (the pagerank/CC skew-gate pattern): the
-    # successor count per (s, u) is bounded by the max out-degree
-    mx_out = (
-        e.groupBy("src").agg(F.count("*").alias("d")).agg(F.max("d")).collect()[0][0]
-    )
-    two_level = (mx_out or 0) > FOLD_CAP
-
+    fold, which is at most u's out-degree. The gate reads the loop
+    driver's setup aggregate, `lp.stats["max_degree"]`: the most edges
+    on one `src`, i.e. the max out-degree, at no job of its own. Only
+    graphs with a hub past the cap take the two-level fold path, which
+    buckets by the same FOLD_CAP."""
     # forward: settled (s, vid, dist, sigma); frontier = newest level
     frontier = sources.select(
         F.col("vid").alias("s"),
@@ -130,7 +124,9 @@ def _brandes_passes(e: DataFrame, sources: DataFrame, max_hops: int):
         F.lit(1).cast("bigint").alias("sigma"),
     ).localCheckpoint(eager=True)
     settled = frontier
-    with iterative_conf(spark):
+    with spmv_loop(edges, "src") as lp:
+        e = lp.edges
+        two_level = (lp.stats["max_degree"] or 0) > FOLD_CAP
         for h in range(1, max_hops + 1):
             if frontier.isEmpty():
                 break
@@ -199,19 +195,6 @@ def _brandes_passes(e: DataFrame, sources: DataFrame, max_hops: int):
     return deltas, term_levels
 
 
-def _prep(edges: DataFrame, directed: bool):
-    spark = edges.sparkSession
-    n_shuffle = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    e = (edges.select("src", "dst") if directed else symmetrize(edges))
-    e = e.repartition(n_shuffle, "src").cache()
-    verts = (
-        e.select(F.col("src").alias("vid"))
-        .union(e.select(F.col("dst").alias("vid")))
-        .distinct()
-    )
-    return e, verts
-
-
 def betweenness(
     edges: DataFrame,
     sources: DataFrame,
@@ -222,7 +205,7 @@ def betweenness(
     dependency sum over the given `sources` (a (vid) DataFrame).
     Unreached vertices score 0.0. Endpoint convention: the source's
     own δ is excluded (standard Brandes, endpoints not counted)."""
-    e, verts = _prep(edges, directed)
+    e = edges.select("src", "dst") if directed else symmetrize(edges)
     deltas, _ = _brandes_passes(e, sources, max_hops)
     all_delta = None
     for d in deltas:
@@ -236,7 +219,8 @@ def betweenness(
             F.aggregate("tk", F.lit(0.0), lambda acc, t: acc + t["delta"]).alias("bc"),
         )
     )
-    return verts.join(bc, "vid", "left").select(
+    verts = e.select(F.col("src").alias("vid")).union(e.select(F.col("dst").alias("vid")))
+    return verts.distinct().join(bc, "vid", "left").select(
         "vid", F.coalesce("bc", F.lit(0.0)).alias("bc")
     )
 
@@ -252,7 +236,7 @@ def edge_betweenness(
     in ascending (s, then DAG orientation) order — the same bitwise
     ordered-fold contract as the vertex kernel. Edges on no shortest
     path from any source score 0.0."""
-    e, _ = _prep(edges, directed=False)
+    e = symmetrize(edges)
     _, term_levels = _brandes_passes(e, sources, max_hops)
     allt = None
     for t in term_levels:

@@ -57,9 +57,10 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from parrsb_spark.functions.loop import spmv_loop
 from parrsb_spark.functions.spmv import symmetrize
 from parrsb_spark.operators.mis import vertex_priority
-from parrsb_spark.session import hard_truncate, iterative_conf
+from parrsb_spark.session import hard_truncate
 from parrsb_spark.sources.edges import vertices_from_edges
 
 
@@ -97,9 +98,6 @@ def greedy_coloring(
     0-based and ≤ degree(v) by the greedy bound."""
     if method not in ("spec", "jp"):
         raise ValueError(f"unknown coloring method {method!r}")
-    spark = edges.sparkSession
-    n_shuffle = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    sym = symmetrize(edges).repartition(n_shuffle, "src").cache()
     p = priority_col if priority_col is not None else vertex_priority(F.col("vid"))
     und = (
         vertices_from_edges(edges)
@@ -107,7 +105,8 @@ def greedy_coloring(
         .localCheckpoint(eager=True)
     )
     colored = None  # (vid, color, round)
-    with iterative_conf(spark):
+    with spmv_loop(symmetrize(edges), "src") as lp:
+        sym = lp.edges
         for r in range(1, max_rounds + 1):
             if und.isEmpty():
                 break

@@ -47,9 +47,9 @@ from typing import Callable
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from parrsb_spark.functions.loop import key_degrees, spmv_loop
 from parrsb_spark.functions.spmv import symmetrize
 from parrsb_spark.operators.mis import KNUTH_MULT, PRIO_MOD
-from parrsb_spark.session import iterative_conf
 
 EDGE_MULT2 = 40503  # odd 16-bit scrambler for the second endpoint
 
@@ -80,18 +80,16 @@ def maximal_matching(
     `priority_fn(u, v, round)` overrides the edge priority (e.g. an
     xxhash64 mix for graphs past 2^32 vertices — the default exists
     so a SQL oracle can replay it exactly)."""
-    spark = edges.sparkSession
-    n_shuffle = int(spark.conf.get("spark.sql.shuffle.partitions"))
     prio = priority_fn or edge_round_priority
-    live = (
+    canon = (
         symmetrize(edges)
         .filter(F.col("src") < F.col("dst"))
         .select(F.col("src").alias("u"), F.col("dst").alias("v"))
-        .repartition(n_shuffle, "u")
-        .localCheckpoint(eager=True)
     )
     matched = None
-    with iterative_conf(spark):
+    # the hub gate counts both canonical roles: a vertex's full degree
+    with spmv_loop(canon, "u", probe=lambda lp: key_degrees(lp.edges, "u", "v")) as lp:
+        live = lp.edges
         for r in range(1, max_rounds + 1):
             if live.isEmpty():
                 break

@@ -37,11 +37,11 @@ Scale design:
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column, DataFrame, Observation
 from pyspark.sql import functions as F
 
+from parrsb_spark.functions.loop import spmv_loop
 from parrsb_spark.functions.spmv import symmetrize
-from parrsb_spark.session import iterative_conf
 from parrsb_spark.sources.edges import vertices_from_edges
 
 #: Knuth's multiplicative constant (2^32 / phi, odd -> bijective mod 2^32).
@@ -81,7 +81,6 @@ def mis(
     efficiency); the bounded collect ends them at one job. 0 (default)
     = never collect; pure distributed rounds."""
     spark = edges.sparkSession
-    n_shuffle = int(spark.conf.get("spark.sql.shuffle.partitions"))
     sym = symmetrize(edges)
     p = priority_col if priority_col is not None else vertex_priority(F.col("vid"))
     und = (
@@ -91,18 +90,18 @@ def mis(
     )
     # live edge set: both endpoints undecided (invariant), dst priority
     # attached once so each round pays ONE agg + ONE membership join
-    alive = (
-        sym.join(und.select(F.col("vid").alias("dst"), F.col("p").alias("pd")), "dst")
-        .select("src", "dst", "pd")
-        .repartition(n_shuffle, "src")
-        .localCheckpoint(eager=True)
-    )
+    live = sym.join(
+        und.select(F.col("vid").alias("dst"), F.col("p").alias("pd")), "dst"
+    ).select("src", "dst", "pd")
     decided = None
-    with iterative_conf(spark):
+    with spmv_loop(live, "src") as lp:
+        # the live edge count the tail escape tests: the setup aggregate's
+        # row count in round 1, then observed on each round's checkpoint
+        alive, n_alive = lp.edges, lp.stats["rows"] or 0
         for r in range(1, max_rounds + 1):
             if und.isEmpty():
                 break
-            if local_threshold and alive.count() <= local_threshold:
+            if local_threshold and n_alive <= local_threshold:
                 batch_rows, left_rows = _mis_local(
                     [(x["vid"], x["p"]) for x in und.collect()],
                     [(x["src"], x["dst"]) for x in alive.collect()],
@@ -152,17 +151,29 @@ def mis(
                 und.join(batch.select("vid"), "vid", "left_anti")
                 .localCheckpoint(eager=True)
             )
-            alive = (
+            alive, n_alive = _counted_checkpoint(
                 alive.join(und.select(F.col("vid").alias("src")), "src")
                 .join(und.select(F.col("vid").alias("dst")), "dst")
                 .select("src", "dst", "pd")
-                .localCheckpoint(eager=True)
             )
     leftover = und.select(
         "vid", F.lit(-1).alias("in_mis"), F.lit(-1).alias("round")
     )
     out = leftover if decided is None else decided.unionAll(leftover)
     return out.select("vid", "in_mis", "round")
+
+
+def _counted_checkpoint(df: DataFrame) -> tuple[DataFrame, int]:
+    """Eager localCheckpoint of `df` and its row count, observed on the
+    checkpoint's own job (no second count job). The observation must be
+    on the frame the eager action executes: observed through a lazy
+    checkpoint it reads back empty, so a missing count raises."""
+    obs = Observation()
+    out = df.observe(obs, F.count(F.lit(1)).alias("n")).localCheckpoint(eager=True)
+    n = obs.get.get("n")
+    if n is None:
+        raise RuntimeError("mis: live edge count was not observed on its checkpoint")
+    return out, n
 
 
 def _mis_local(

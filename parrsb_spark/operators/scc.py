@@ -40,8 +40,14 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from parrsb_spark.session import hard_truncate, iterative_conf
+from parrsb_spark.functions.loop import spmv_loop
+from parrsb_spark.session import hard_truncate
 from parrsb_spark.sources.edges import vertices_from_edges
+
+
+def _simple_edges(edges: DataFrame) -> DataFrame:
+    """(src, dst) without self-loops or duplicates."""
+    return edges.filter(F.col("src") != F.col("dst")).select("src", "dst").distinct()
 
 
 def _tarjan_local(edge_rows: list, vert_rows: list) -> list[tuple]:
@@ -130,14 +136,6 @@ def strongly_connected_components(
         # the coloring loop's unconverged guard needs at least one pass
         raise ValueError(f"scc: max_iter must be >= 1, got {max_iter}")
     spark = edges.sparkSession
-    n_shuffle = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    e_all = (
-        edges.filter(F.col("src") != F.col("dst"))
-        .select("src", "dst")
-        .distinct()
-        .repartition(n_shuffle, "src")
-        .cache()
-    )
     verts = (vertices or vertices_from_edges(edges)).select("vid")
     active = hard_truncate(verts)
     done: DataFrame | None = None
@@ -146,10 +144,10 @@ def strongly_connected_components(
         nonlocal done
         done = piece if done is None else done.union(piece)
 
-    e_cur = e_all  # shrinks with active: each filter starts from the
-    # previous survivor set, so trim-iteration cost tracks the residue,
-    # not the full input
-    with iterative_conf(spark, disable_aqe=False):
+    with spmv_loop(_simple_edges(edges), "src") as lp:
+        e_cur = lp.edges  # shrinks with active: each filter starts from
+        # the previous survivor set, so trim-iteration cost tracks the
+        # residue, not the full input
         for _ in range(max_rounds):
             # --- 1. trim to fixpoint: no in-edge or no out-edge ⇒ singleton
             while True:
@@ -175,7 +173,7 @@ def strongly_connected_components(
             # every forward-coloring iteration joins on src, so the edge-side
             # exchange is paid once per outer round, not once per iteration
             # (hard_truncate drops partitioning metadata — see session.py)
-            eact = eact.repartition(n_shuffle, "src").cache()
+            eact = lp.cache(eact.repartition(lp.partitions, "src"))
 
             # --- phase-3 escape: bounded residue → exact driver-local Tarjan
             if local_threshold and eact.count() <= local_threshold:
@@ -192,7 +190,7 @@ def strongly_connected_components(
                 break
 
             # --- 2. forward min-vid coloring over the directed active edges
-            color = active.withColumn("color", F.col("vid")).repartition(n_shuffle, "vid")
+            color = active.withColumn("color", F.col("vid")).repartition(lp.partitions, "vid")
             color = hard_truncate(color)
             it = 0
             while it < max_iter:
@@ -231,7 +229,7 @@ def strongly_connected_components(
             # the converged color table is joined once per backward hop;
             # pin it hash-partitioned on vid so each hop pays only the
             # candidate-side exchange
-            color = color.repartition(n_shuffle, "vid").cache()
+            color = lp.cache(color.repartition(lp.partitions, "vid"))
             visited = hard_truncate(
                 color.filter(F.col("color") == F.col("vid")).select("vid", "color")
             )
@@ -266,7 +264,6 @@ def strongly_connected_components(
                 raise RuntimeError(
                     f"scc: {remaining} vertices unresolved after {max_rounds} rounds"
                 )
-    e_all.unpersist()
     if done is None:  # empty vertex set
         return verts.withColumn("scc", F.col("vid"))
     return done
@@ -287,21 +284,24 @@ def condensation_levels(
     1 + max(level of predecessors), i.e. its longest-path depth). Rounds
     = condensation depth; each round is two anti/semi-joins on the
     SHRINKING condensation — orders smaller than the vertex set."""
-    spark = edges.sparkSession
-    labels = (scc if scc is not None else strongly_connected_components(edges)).cache()
-    e = edges.filter(F.col("src") != F.col("dst")).select("src", "dst").distinct()
-    ce = (
-        e.join(labels.select(F.col("vid").alias("src"), F.col("scc").alias("_sa")), "src")
-        .join(labels.select(F.col("vid").alias("dst"), F.col("scc").alias("_sb")), "dst")
-        .filter(F.col("_sa") != F.col("_sb"))
-        .select(F.col("_sa").alias("csrc"), F.col("_sb").alias("cdst"))
-        .distinct()
-    )
-    ce = hard_truncate(ce)
-    remaining = hard_truncate(labels.select("scc").distinct().withColumnRenamed("scc", "node"))
+    labels = scc if scc is not None else strongly_connected_components(edges)
     out: DataFrame | None = None
     lvl = 0
-    with iterative_conf(spark, disable_aqe=False):
+    with spmv_loop(_simple_edges(edges), "src") as lp:
+        labels = lp.cache(labels)
+        ce = (
+            lp.edges.join(
+                labels.select(F.col("vid").alias("src"), F.col("scc").alias("_sa")), "src"
+            )
+            .join(labels.select(F.col("vid").alias("dst"), F.col("scc").alias("_sb")), "dst")
+            .filter(F.col("_sa") != F.col("_sb"))
+            .select(F.col("_sa").alias("csrc"), F.col("_sb").alias("cdst"))
+            .distinct()
+        )
+        ce = hard_truncate(ce)
+        remaining = hard_truncate(
+            labels.select("scc").distinct().withColumnRenamed("scc", "node")
+        )
         while lvl < max_levels:
             if remaining.isEmpty():
                 break
@@ -319,9 +319,7 @@ def condensation_levels(
     levels = out if out is not None else labels.select("scc").distinct().withColumn(
         "level", F.lit(0)
     )
-    res = labels.join(levels, "scc").select("vid", "scc", "level")
-    labels.unpersist()
-    return res
+    return labels.join(levels, "scc").select("vid", "scc", "level")
 
 
 def bowtie_classes(
@@ -338,41 +336,28 @@ def bowtie_classes(
     (deterministic). Reachability = multi-seed frontier fixpoints, one
     forward and one backward — O(diameter) shuffle rounds each.
     """
-    spark = edges.sparkSession
     labels = scc if scc is not None else strongly_connected_components(edges)
-    labels = labels.cache()
-    top = (
-        labels.groupBy("scc")
-        .agg(F.count("*").alias("cnt"))
-        .orderBy(F.col("cnt").desc(), F.col("scc").asc())
-        .limit(1)
-    )
-    core = hard_truncate(labels.join(F.broadcast(top), "scc", "left_semi").select("vid"))
-    e = (
-        edges.filter(F.col("src") != F.col("dst")).select("src", "dst").distinct().cache()
-    )
 
-    def reach_fixpoint(seed: DataFrame, forward: bool) -> DataFrame:
+    def reach_fixpoint(e: DataFrame, seed: DataFrame, forward: bool) -> DataFrame:
         src, dst = ("src", "dst") if forward else ("dst", "src")
         visited = seed
         frontier = seed
         it = 0
         converged = False
-        with iterative_conf(spark, disable_aqe=False):
-            while it < max_iter:
-                nxt = (
-                    e.join(frontier.withColumnRenamed("vid", src), src, "left_semi")
-                    .select(F.col(dst).alias("vid"))
-                    .distinct()
-                    .join(visited, "vid", "left_anti")
-                )
-                nxt = hard_truncate(nxt)
-                if nxt.isEmpty():
-                    converged = True
-                    break
-                visited = hard_truncate(visited.union(nxt))
-                frontier = nxt
-                it += 1
+        while it < max_iter:
+            nxt = (
+                e.join(frontier.withColumnRenamed("vid", src), src, "left_semi")
+                .select(F.col(dst).alias("vid"))
+                .distinct()
+                .join(visited, "vid", "left_anti")
+            )
+            nxt = hard_truncate(nxt)
+            if nxt.isEmpty():
+                converged = True
+                break
+            visited = hard_truncate(visited.union(nxt))
+            frontier = nxt
+            it += 1
         if not converged:
             # a silently truncated reachability set misclassifies IN/OUT
             # for paths longer than max_iter hops — same loud-failure
@@ -383,8 +368,17 @@ def bowtie_classes(
             )
         return visited
 
-    fwd = reach_fixpoint(core, forward=True)  # core ∪ OUT
-    bwd = reach_fixpoint(core, forward=False)  # core ∪ IN
+    with spmv_loop(_simple_edges(edges), "src") as lp:
+        labels = lp.cache(labels)
+        top = (
+            labels.groupBy("scc")
+            .agg(F.count("*").alias("cnt"))
+            .orderBy(F.col("cnt").desc(), F.col("scc").asc())
+            .limit(1)
+        )
+        core = hard_truncate(labels.join(F.broadcast(top), "scc", "left_semi").select("vid"))
+        fwd = reach_fixpoint(lp.edges, core, forward=True)  # core ∪ OUT
+        bwd = reach_fixpoint(lp.edges, core, forward=False)  # core ∪ IN
     out = (
         labels.select("vid")
         .join(core.withColumn("_c", F.lit(1)), "vid", "left")
@@ -399,6 +393,4 @@ def bowtie_classes(
             .alias("cls"),
         )
     )
-    labels.unpersist()
-    e.unpersist()
     return out

@@ -4,6 +4,7 @@ Design notes for scale (the 1000-executor / 100 TB target):
 - AQE on: runtime shuffle-partition coalescing + skew-join splitting is
   what replaces the reference's hand-rolled histogram/hypercube range
   partitioning (ref /root/reference/src/sort-bin.c, src/sort-hypercube.c).
+  Driver-loop kernels scope their own conf (functions/loop.py).
 - Arrow on: every Python-side kernel is an Arrow-batched pandas UDF; no
   row-at-a-time Python anywhere.
 - UTC session TZ pinned so results compare bit-stably against the
@@ -93,112 +94,6 @@ def get_spark(
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
-
-
-from contextlib import contextmanager
-
-
-def loop_partitions(n_rows: int, n_shuffle: int, rows_per_task: int | None = None) -> int:
-    """Scale-adaptive parallelism for a driver-loop kernel (guide §2.2):
-    enough partitions that every task carries ~`rows_per_task` edge
-    rows, CAPPED at the session's configured shuffle parallelism.
-
-    On a cluster-sized input the cap wins and this is exactly the
-    session conf (no behavior change at scale); on a small input it
-    stops a 25-iteration loop from paying 3 stages × n_shuffle tasks of
-    scheduling latency per iteration for sub-millisecond tasks —
-    measured at sf0.1 (587k edges, local[32]): fiedler 24.4 → 10.9s,
-    pagerank 6.3 → 2.5s warm when the loop runs at 8 partitions
-    instead of 32. The AQE partition-coalescing that would normally do
-    this is deliberately OFF inside iterative loops (see
-    iterative_conf), so loops size their exchanges explicitly from the
-    row count their setup already collects (functions/loop.py)."""
-    if rows_per_task is None:
-        from parrsb_spark.config import default_options
-
-        rows_per_task = default_options().loop_rows_per_task
-    want = (int(n_rows) + rows_per_task - 1) // rows_per_task
-    return max(1, min(int(n_shuffle), want))
-
-
-@contextmanager
-def iterative_conf(
-    spark: SparkSession,
-    disable_aqe: bool = False,
-    no_auto_broadcast: bool = False,
-    shuffle_partitions: int | None = None,
-):
-    """Tune the session for a driver-loop iterative kernel.
-
-    AQE's post-shuffle partition coalescing targets bytes-per-partition,
-    which for the small-but-latency-critical per-iteration shuffles of
-    PageRank/CC/Lanczos collapses task counts below the core count and
-    idles executors (measured 2x slowdown at 8 executors on a 16M-edge
-    graph). Inside iterative loops we keep AQE (skew-join splitting is
-    still valuable) but disable coalescing; restored on exit.
-
-    `disable_aqe=True` turns AQE off ENTIRELY inside the loop. AQE's
-    runtime re-planning costs extra scheduler jobs per materialized
-    stage — measured on the 587k-edge bench graph: a 25-iteration
-    Lanczos solve is 278 Spark jobs with AQE vs 97 without, 61s vs 36s
-    best-of-3, and far lower variance. The only AQE feature an
-    iterative kernel's plans can use is skew-join splitting (joins are
-    pre-hash-partitioned, broadcasts are explicit), so callers gate this
-    on measured degree skew (functions/loop.py). Restored on exit.
-
-    Constraint propagation is also disabled: Catalyst's constraint
-    inference is super-linear in chained join/alias depth, and per-
-    iteration localCheckpoint plans re-derive constraints every loop —
-    measured as a DRIVER-side hang (>20 min at 100% on one core in
-    LogicalRDD.rewriteStatsAndConstraints) for the CSR-SpMV Lanczos at
-    sf0.1. Constraints only power optimizations (extra filters/join
-    pruning) that per-iteration kernel plans don't need.
-    """
-    keys = {
-        "spark.sql.adaptive.coalescePartitions.enabled": "false",
-        "spark.sql.constraintPropagation.enabled": "false",
-    }
-    if disable_aqe:
-        keys["spark.sql.adaptive.enabled"] = "false"
-    if shuffle_partitions is not None:
-        # loop exchanges sized from the DATA (see loop_partitions), not
-        # the session constant; restored on exit like every other key
-        keys["spark.sql.shuffle.partitions"] = str(int(shuffle_partitions))
-    if no_auto_broadcast:
-        # SpMV-loop kernels opt in (pagerank/CC/fiedler — measured):
-        # their per-iteration join pairs a CACHED edge table (accurate
-        # size stats) with a checkpointed state (unknown stats), so
-        # below the threshold the planner broadcasts the EDGE SIDE and
-        # rebuilds that broadcast EVERY iteration — a driver collect +
-        # hash-relation build per iteration for a loop-invariant table
-        # (broadcast-exchange reuse does not span queries). The
-        # co-partitioned sort-merge join the kernels lay out (edges
-        # hash-partitioned+sorted on the join key once, at cache time)
-        # is both the 100 TB plan and the faster local plan (measured:
-        # fiedler 25.5 → 21.8s, pagerank 7.2 → 6.1s, CC 5.6 → 4.6s warm
-        # at sf0.1). Explicit F.broadcast() hints (dangling mass, group
-        # scalars, split maps) are unaffected by the threshold.
-        keys["spark.sql.autoBroadcastJoinThreshold"] = "-1"
-    # capture the EFFECTIVE value (conf.get with a fallback returns the
-    # fallback whenever the key is merely unset — restoring a "true"
-    # fallback into a bytes-typed conf like autoBroadcastJoinThreshold
-    # poisons the session; caught by tools/run_submit_smoke.sh)
-    old: dict[str, str | None] = {}
-    for k in keys:
-        try:
-            old[k] = spark.conf.get(k)
-        except Exception:
-            old[k] = None
-    for k, v in keys.items():
-        spark.conf.set(k, v)
-    try:
-        yield
-    finally:
-        for k, v in old.items():
-            if v is None:
-                spark.conf.unset(k)
-            else:
-                spark.conf.set(k, v)
 
 
 def hard_truncate(df, eager: bool = True):

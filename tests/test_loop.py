@@ -1,7 +1,7 @@
-"""The SpMV loop driver (functions/loop.py): conf scope and cache hygiene.
+"""The loop driver (functions/loop.py): conf scope and cache hygiene.
 
-Every ported kernel runs its loop inside `spmv_loop`, which owns the
-edge cache, the degree probe and the `iterative_conf` scope. These
+Every driver-loop kernel runs its loop inside `spmv_loop`, which owns
+the edge cache, the degree probe and the `iterative_conf` scope. These
 tests pin the driver's exit contract — the session conf comes back
 unchanged and nothing stays cached — on the failure path and for each
 kernel's normal return.
@@ -21,7 +21,9 @@ from parrsb_spark.operators.anf import (
     harmonic_centrality_estimates,
     neighborhood_function,
 )
+from parrsb_spark.operators.betweenness import betweenness, edge_betweenness
 from parrsb_spark.operators.bfs import bfs_distances
+from parrsb_spark.operators.coloring import greedy_coloring
 from parrsb_spark.operators.components import connected_components
 from parrsb_spark.operators.coreness import coreness
 from parrsb_spark.operators.fiedler import fiedler
@@ -29,11 +31,18 @@ from parrsb_spark.operators.hits import hits
 from parrsb_spark.operators.katz import katz_centrality
 from parrsb_spark.operators.kcore import kcore
 from parrsb_spark.operators.labelprop import label_propagation
+from parrsb_spark.operators.matching import maximal_matching
+from parrsb_spark.operators.mis import mis
 from parrsb_spark.operators.pagerank import pagerank, personalized_pagerank
 from parrsb_spark.operators.rsb import rsb_partition
+from parrsb_spark.operators.scc import (
+    bowtie_classes,
+    condensation_levels,
+    strongly_connected_components,
+)
 from parrsb_spark.operators.sssp import sssp
 
-# every key session.iterative_conf can set
+# every key iterative_conf can set
 LOOP_CONF_KEYS = (
     "spark.sql.adaptive.enabled",
     "spark.sql.adaptive.coalescePartitions.enabled",
@@ -115,6 +124,16 @@ KERNELS = {
     "harmonic_centrality_estimates": lambda e, s: harmonic_centrality_estimates(e, max_hops=3),
     "fiedler": lambda e, s: fiedler(e, opts=_rsb_opts()),
     "rsb_partition": lambda e, s: rsb_partition(e, 2, opts=_rsb_opts()),
+    "greedy_coloring_spec": lambda e, s: greedy_coloring(e, max_rounds=3, method="spec"),
+    "greedy_coloring_jp": lambda e, s: greedy_coloring(e, max_rounds=3, method="jp"),
+    "mis": lambda e, s: mis(e, max_rounds=3),
+    "mis_local_tail": lambda e, s: mis(e, max_rounds=4, local_threshold=200),
+    "maximal_matching": lambda e, s: maximal_matching(e, max_rounds=3),
+    "betweenness": lambda e, s: betweenness(e, _seeds(s), max_hops=3),
+    "edge_betweenness": lambda e, s: edge_betweenness(e, _seeds(s), max_hops=3),
+    "strongly_connected_components": lambda e, s: strongly_connected_components(e),
+    "condensation_levels": lambda e, s: condensation_levels(e),
+    "bowtie_classes": lambda e, s: bowtie_classes(e),
 }
 
 
@@ -144,5 +163,18 @@ def test_fiedler_solve_error_restores_conf_and_releases_caches(spark, powerlaw, 
     before = _conf(spark)
     with pytest.raises(RuntimeError, match="lanczos failed"):
         fiedler(powerlaw, opts=_rsb_opts())
+    assert _conf(spark) == before
+    assert _cache_empty(spark)
+
+
+def test_scc_unconverged_restores_conf_and_releases_caches(spark):
+    """The forward coloring's unconverged guard raises inside the loop;
+    the session conf comes back and neither the edge cache nor the
+    round's active-edge cache stays behind."""
+    spark.catalog.clearCache()
+    cycle = graphs.to_df(spark, graphs.ring(6))  # directed 6-cycle: no trim
+    before = _conf(spark)
+    with pytest.raises(RuntimeError, match="did not converge"):
+        strongly_connected_components(cycle, max_iter=1)
     assert _conf(spark) == before
     assert _cache_empty(spark)

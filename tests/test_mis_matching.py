@@ -165,3 +165,30 @@ def test_mis_local_tail_respects_round_cap(spark):
     dist = {tuple(r) for r in mis(e, max_rounds=2).collect()}
     local = {tuple(r) for r in mis(e, max_rounds=2, local_threshold=10**9).collect()}
     assert dist == local
+
+
+def test_mis_local_tail_self_loops_only(spark):
+    # no live edge at all: the escape still fires and decides every vertex
+    e = spark.createDataFrame([(1, 1), (2, 2)], "src long, dst long")
+    assert sorted(mis(e, local_threshold=10).collect()) == sorted(mis(e).collect())
+
+
+def test_mis_local_tail_missing_count_raises(spark, monkeypatch):
+    # the per-round live edge count is observed on the round's
+    # checkpoint; an observation that reads back empty must raise,
+    # never pass as "small enough to collect"
+    import importlib
+
+    from pyspark.sql import Observation
+
+    mmod = importlib.import_module("parrsb_spark.operators.mis")
+
+    class Unread(Observation):
+        @property
+        def get(self):
+            return {"n": None}
+
+    monkeypatch.setattr(mmod, "Observation", Unread)
+    e = spark.createDataFrame([(i, i + 1) for i in range(40)], "src long, dst long")
+    with pytest.raises(RuntimeError, match="not observed"):
+        mis(e, local_threshold=1).collect()

@@ -61,6 +61,14 @@ def main():
     import __spark_entry__ as m
     from parrsb_spark.session import get_spark
 
+    qs, osql = m.queries(), m.oracle_sql()
+    unknown = sorted(only - set(qs))
+    if unknown:
+        # a name queries() does not register would otherwise be skipped
+        # and the run would still end with FAILURES: none
+        print("UNKNOWN QUERIES (not in queries()):", " ".join(unknown))
+        sys.exit(1)
+
     spark = get_spark(master="local[16]", app_name="oracle-check", shuffle_partitions=16)
 
     con = duckdb.connect()
@@ -68,7 +76,6 @@ def main():
     for t in TABLES:
         con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'")
 
-    qs, osql = m.queries(), m.oracle_sql()
     failures = []
     for name, fn in qs.items():
         if only and name not in only:
