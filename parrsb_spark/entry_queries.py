@@ -1329,14 +1329,16 @@ def scc_digraph_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     arithmetic (functions/hashing.py)."""
     from parrsb_spark.functions.hashing import md5_long_col
     from parrsb_spark.functions.ids import dense_ids
+    from parrsb_spark.functions.loop import counted_checkpoint
 
     c = _load(spark, sf_dir, "customer").filter(F.col("c_custkey") % SCC_CUST_MOD == 0)
     ids = dense_ids(c.select("c_custkey"), key_col="c_custkey", out_col="rid1")
-    cust = ids.select(
+    # one setup scalar (the oracle's count(*) twin), observed on the
+    # checkpoint's job; a checkpoint, unlike a cache, leaves nothing to release
+    cust, n, _ = counted_checkpoint(ids.select(
         (F.col("rid1") - 1).cast("bigint").alias("rid"),
         md5_long_col(F.col("c_custkey").cast("string")).alias("h"),
-    ).cache()
-    n = cust.count()  # one setup scalar (the oracle's count(*) twin)
+    ))
     fwd1 = cust.filter(
         (F.col("rid") + 1 < n) & ((F.col("rid") + 1) % SCC_BLOCK != 0)
     ).select(F.col("rid").alias("src"), (F.col("rid") + 1).alias("dst"))

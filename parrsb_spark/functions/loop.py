@@ -31,6 +31,12 @@ This module decides the whole loop policy; no kernel opens its own:
 - Release. Every cache the loop owns is released on exit, error
   included; a result the body leaves lazy is then recomputed from its
   lineage.
+- Round counts. `counted_checkpoint` is how a loop learns that a round
+  is empty or converged: the eager checkpoint that materializes the
+  round observes its row count and changed rows, at no job of its own.
+  It is eager only: read through a lazy checkpoint, an observation came
+  back as `{'n': 0}` (measured), a missing count passing silently as
+  "empty/converged". A count that does not come back raises.
 """
 
 from __future__ import annotations
@@ -40,10 +46,11 @@ from dataclasses import dataclass, field
 from functools import reduce
 from typing import Callable
 
-from pyspark.sql import DataFrame, Row, SparkSession
+from pyspark.sql import Column, DataFrame, Observation, Row, SparkSession
 from pyspark.sql import functions as F
 
 from parrsb_spark.config import default_options
+from parrsb_spark.session import hard_truncate
 
 
 def loop_partitions(n_rows: int, n_shuffle: int, rows_per_task: int) -> int:
@@ -187,3 +194,22 @@ def spmv_loop(
     finally:
         for df in loop._owned:
             df.unpersist()
+
+
+def counted_checkpoint(
+    df: DataFrame, *, hard: bool = False, changed: Column | None = None
+) -> tuple[DataFrame, int, int | None]:
+    """(checkpoint, n, n_changed): `df` checkpointed eagerly
+    (`session.hard_truncate` if `hard`, else `localCheckpoint`), its row
+    count, and the rows where the boolean `changed` holds (None without
+    it), both observed on the checkpoint's own job."""
+    obs = Observation()
+    metrics = [F.count(F.lit(1)).alias("n")]
+    if changed is not None:
+        metrics.append(F.coalesce(F.sum(changed.cast("long")), F.lit(0)).alias("changed"))
+    seen = df.observe(obs, *metrics)
+    out = hard_truncate(seen) if hard else seen.localCheckpoint(eager=True)
+    got = obs.get
+    if got.get("n") is None:
+        raise RuntimeError("counted_checkpoint: the row count was not observed on its job")
+    return out, got["n"], got.get("changed")

@@ -45,7 +45,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from parrsb_spark.functions.loop import spmv_loop
+from parrsb_spark.functions.loop import counted_checkpoint, spmv_loop
 from parrsb_spark.functions.spmv import symmetrize
 
 
@@ -117,27 +117,28 @@ def _brandes_passes(edges: DataFrame, sources: DataFrame, max_hops: int):
     graphs with a hub past the cap take the two-level fold path, which
     buckets by the same FOLD_CAP."""
     # forward: settled (s, vid, dist, sigma); frontier = newest level
-    frontier = sources.select(
-        F.col("vid").alias("s"),
-        F.col("vid"),
-        F.lit(0).alias("dist"),
-        F.lit(1).cast("bigint").alias("sigma"),
-    ).localCheckpoint(eager=True)
+    frontier, n_frontier, _ = counted_checkpoint(
+        sources.select(
+            F.col("vid").alias("s"),
+            F.col("vid"),
+            F.lit(0).alias("dist"),
+            F.lit(1).cast("bigint").alias("sigma"),
+        )
+    )
     settled = frontier
     with spmv_loop(edges, "src") as lp:
         e = lp.edges
         two_level = (lp.stats["max_degree"] or 0) > FOLD_CAP
         for h in range(1, max_hops + 1):
-            if frontier.isEmpty():
+            if n_frontier == 0:
                 break
-            nxt = (
+            nxt, n_frontier, _ = counted_checkpoint(
                 frontier.join(e, frontier.vid == e.src)
                 .groupBy("s", F.col("dst").alias("vid"))
                 .agg(F.sum("sigma").alias("sigma"))
                 .withColumn("dist", F.lit(h))
                 .join(settled.select("s", "vid"), ["s", "vid"], "left_anti")
                 .select("s", "vid", "dist", "sigma")
-                .localCheckpoint(eager=True)
             )
             settled = settled.unionAll(nxt).localCheckpoint(eager=True)
             frontier = nxt
@@ -151,16 +152,18 @@ def _brandes_passes(edges: DataFrame, sources: DataFrame, max_hops: int):
         deltas = [delta]
         term_levels = []
         for h in range(max_hops, 0, -1):
+            # both sides come from `settled`: explicit aliases keep the
+            # `s` equality a real predicate between the two levels
             lo = settled.filter(F.col("dist") == h - 1).select(
                 "s", F.col("vid").alias("u"), F.col("sigma").alias("su")
-            )
+            ).alias("lo")
             hi = settled.filter(F.col("dist") == h).select(
                 "s", F.col("vid").alias("v"), F.col("sigma").alias("sv")
-            )
+            ).alias("hi")
             pairs = (
-                lo.join(e, lo.u == e.src)
-                .join(hi, (F.col("dst") == hi.v) & (lo.s == hi.s))
-                .select(lo.s, "u", "su", "v", "sv")
+                lo.join(e, F.col("u") == e.src)
+                .join(hi, (F.col("dst") == F.col("v")) & (F.col("lo.s") == F.col("hi.s")))
+                .select("lo.s", "u", "su", "v", "sv")
             )
             terms = pairs.join(
                 delta.select(F.col("s"), F.col("vid").alias("v"), "delta"),

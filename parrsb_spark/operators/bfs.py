@@ -19,7 +19,7 @@ Scale design:
   no per-key funnels — a 10^8-degree hub contributes one row per map
   task to the frontier shuffle.
 - each round's new frontier is localCheckpointed eagerly and the
-  early-exit count reads that same materialization (no extra job);
+  early-exit count is observed on that same job (no extra job);
   the settled set is a union of ≤ max_hops checkpointed frames, so
   lineage stays flat at any depth.
 - early exit when the frontier empties. Settled distances never
@@ -33,7 +33,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from parrsb_spark.functions.loop import spmv_loop
+from parrsb_spark.functions.loop import counted_checkpoint, spmv_loop
 from parrsb_spark.functions.spmv import symmetrize
 
 
@@ -63,12 +63,11 @@ def bfs_distances(
                 .select(F.col("dst").alias("vid"))
                 .distinct()
             )
-            frontier = (
+            frontier, n, _ = counted_checkpoint(
                 reached.join(settled.select("vid"), "vid", "left_anti")
                 .withColumn("dist", F.lit(h).cast("long"))
-                .localCheckpoint(eager=True)
             )
-            if frontier.count() == 0:
+            if n == 0:
                 break
             settled = settled.unionByName(frontier)
     return settled.select("vid", "dist")

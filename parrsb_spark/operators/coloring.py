@@ -57,7 +57,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from parrsb_spark.functions.loop import spmv_loop
+from parrsb_spark.functions.loop import counted_checkpoint, spmv_loop
 from parrsb_spark.functions.spmv import symmetrize
 from parrsb_spark.operators.mis import vertex_priority
 from parrsb_spark.session import hard_truncate
@@ -99,16 +99,14 @@ def greedy_coloring(
     if method not in ("spec", "jp"):
         raise ValueError(f"unknown coloring method {method!r}")
     p = priority_col if priority_col is not None else vertex_priority(F.col("vid"))
-    und = (
-        vertices_from_edges(edges)
-        .select("vid", p.cast("bigint").alias("p"))
-        .localCheckpoint(eager=True)
+    und, n_und, _ = counted_checkpoint(
+        vertices_from_edges(edges).select("vid", p.cast("bigint").alias("p"))
     )
     colored = None  # (vid, color, round)
     with spmv_loop(symmetrize(edges), "src") as lp:
         sym = lp.edges
         for r in range(1, max_rounds + 1):
-            if und.isEmpty():
+            if n_und == 0:
                 break
             if method == "jp":
                 targets = hard_truncate(_jp_eligible(sym, und))
@@ -142,7 +140,9 @@ def greedy_coloring(
             colored = (
                 commit if colored is None else hard_truncate(colored.unionAll(commit))
             )
-            und = hard_truncate(und.join(commit.select("vid"), "vid", "left_anti"))
+            und, n_und, _ = counted_checkpoint(
+                und.join(commit.select("vid"), "vid", "left_anti"), hard=True
+            )
     leftover = und.select("vid", F.lit(-1).alias("color"), F.lit(-1).alias("round"))
     out = leftover if colored is None else colored.unionAll(leftover)
     return out.select("vid", "color", "round")

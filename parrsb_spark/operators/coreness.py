@@ -29,8 +29,9 @@ Scale design:
   change is a no-op row; `localCheckpoint` each round truncates
   lineage, and the state appears on ONE side of each join (linear
   origin-stats growth — no hard_truncate needed).
-- early exit when no estimate moved (the count rides the checkpoint
-  action).
+- early exit when no estimate moved: the round's checkpoint keeps the
+  old estimate beside h and observes how many rows have h < est, so
+  the check costs no job of its own.
 """
 
 from __future__ import annotations
@@ -38,7 +39,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from parrsb_spark.functions.loop import spmv_loop
+from parrsb_spark.functions.loop import counted_checkpoint, spmv_loop
 from parrsb_spark.functions.spmv import symmetrize
 
 
@@ -81,15 +82,10 @@ def coreness(edges: DataFrame, max_rounds: int = 32) -> DataFrame:
                 .select(F.col("dst").alias("vid"), F.col("e_src").alias("est"))
             )
             h = _h_index(nbr)
-            nxt = (
-                est.join(h, "vid")
-                .select("vid", F.least(F.col("est"), F.col("h")).alias("est"))
-                .localCheckpoint(eager=True)
+            nxt, _, moved = counted_checkpoint(
+                est.join(h, "vid"), changed=F.col("h") < F.col("est")
             )
-            moved = nxt.join(
-                est.withColumnRenamed("est", "prev"), "vid"
-            ).filter("est <> prev").isEmpty()
-            est = nxt
-            if moved:
+            est = nxt.select("vid", F.least(F.col("est"), F.col("h")).alias("est"))
+            if moved == 0:
                 break
     return est.select("vid", F.col("est").alias("core"))

@@ -17,7 +17,7 @@ Scale design:
 - the survivor set only SHRINKS, so per-round cost is monotonically
   non-increasing; localCheckpoint each round truncates lineage.
 - early exit on a fixed point (survivor count unchanged) — the count
-  is the same action that materializes the checkpoint, no extra job.
+  is observed on the job that materializes the checkpoint, no extra job.
 """
 
 from __future__ import annotations
@@ -25,7 +25,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from parrsb_spark.functions.loop import spmv_loop
+from parrsb_spark.functions.loop import counted_checkpoint, spmv_loop
 from parrsb_spark.functions.spmv import symmetrize
 from parrsb_spark.sources.edges import vertices_from_edges
 
@@ -48,16 +48,14 @@ def kcore(
     with spmv_loop(symmetrize(edges), "src") as lp:
         sym = lp.edges
         for _ in range(max_rounds):
-            deg = (
+            deg, n, _ = counted_checkpoint(
                 sym.join(alive.select(F.col("vid").alias("src")), "src")
                 .join(alive.select(F.col("vid").alias("dst")), "dst")
                 .groupBy(F.col("src").alias("vid"))
                 .agg(F.count("*").alias("core_deg"))
                 .filter(F.col("core_deg") >= k)
-                .localCheckpoint(eager=True)
             )
             alive = deg.select("vid")
-            n = deg.count()
             if n == prev_n or n == 0:
                 break
             prev_n = n

@@ -47,7 +47,7 @@ from typing import Callable
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from parrsb_spark.functions.loop import key_degrees, spmv_loop
+from parrsb_spark.functions.loop import counted_checkpoint, key_degrees, spmv_loop
 from parrsb_spark.functions.spmv import symmetrize
 from parrsb_spark.operators.mis import KNUTH_MULT, PRIO_MOD
 
@@ -89,9 +89,11 @@ def maximal_matching(
     matched = None
     # the hub gate counts both canonical roles: a vertex's full degree
     with spmv_loop(canon, "u", probe=lambda lp: key_degrees(lp.edges, "u", "v")) as lp:
-        live = lp.edges
+        # live edge rows: the setup aggregate's count in round 1, then
+        # observed on each round's checkpoint
+        live, n_live = lp.edges, lp.stats["rows"] or 0
         for r in range(1, max_rounds + 1):
-            if live.isEmpty():
+            if n_live == 0:
                 break
             lv = live.select(
                 "u", "v", prio(F.col("u"), F.col("v"), r).cast("bigint").alias("p")
@@ -117,10 +119,9 @@ def maximal_matching(
                 wins.select(F.col("u").alias("vid"))
                 .unionAll(wins.select(F.col("v").alias("vid")))
             )
-            live = (
+            live, n_live, _ = counted_checkpoint(
                 live.join(mvert.withColumnRenamed("vid", "u"), "u", "left_anti")
                 .join(mvert.withColumnRenamed("vid", "v"), "v", "left_anti")
-                .localCheckpoint(eager=True)
             )
     if matched is None:
         return (

@@ -37,10 +37,10 @@ Scale design:
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, Observation
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from parrsb_spark.functions.loop import spmv_loop
+from parrsb_spark.functions.loop import counted_checkpoint, spmv_loop
 from parrsb_spark.functions.spmv import symmetrize
 from parrsb_spark.sources.edges import vertices_from_edges
 
@@ -83,10 +83,8 @@ def mis(
     spark = edges.sparkSession
     sym = symmetrize(edges)
     p = priority_col if priority_col is not None else vertex_priority(F.col("vid"))
-    und = (
-        vertices_from_edges(edges)
-        .select("vid", p.cast("bigint").alias("p"))
-        .localCheckpoint(eager=True)
+    und, n_und, _ = counted_checkpoint(
+        vertices_from_edges(edges).select("vid", p.cast("bigint").alias("p"))
     )
     # live edge set: both endpoints undecided (invariant), dst priority
     # attached once so each round pays ONE agg + ONE membership join
@@ -99,7 +97,7 @@ def mis(
         # row count in round 1, then observed on each round's checkpoint
         alive, n_alive = lp.edges, lp.stats["rows"] or 0
         for r in range(1, max_rounds + 1):
-            if und.isEmpty():
+            if n_und == 0:
                 break
             if local_threshold and n_alive <= local_threshold:
                 batch_rows, left_rows = _mis_local(
@@ -147,11 +145,10 @@ def mis(
             decided = (
                 batch if decided is None else decided.unionAll(batch)
             ).localCheckpoint(eager=True)
-            und = (
+            und, n_und, _ = counted_checkpoint(
                 und.join(batch.select("vid"), "vid", "left_anti")
-                .localCheckpoint(eager=True)
             )
-            alive, n_alive = _counted_checkpoint(
+            alive, n_alive, _ = counted_checkpoint(
                 alive.join(und.select(F.col("vid").alias("src")), "src")
                 .join(und.select(F.col("vid").alias("dst")), "dst")
                 .select("src", "dst", "pd")
@@ -161,19 +158,6 @@ def mis(
     )
     out = leftover if decided is None else decided.unionAll(leftover)
     return out.select("vid", "in_mis", "round")
-
-
-def _counted_checkpoint(df: DataFrame) -> tuple[DataFrame, int]:
-    """Eager localCheckpoint of `df` and its row count, observed on the
-    checkpoint's own job (no second count job). The observation must be
-    on the frame the eager action executes: observed through a lazy
-    checkpoint it reads back empty, so a missing count raises."""
-    obs = Observation()
-    out = df.observe(obs, F.count(F.lit(1)).alias("n")).localCheckpoint(eager=True)
-    n = obs.get.get("n")
-    if n is None:
-        raise RuntimeError("mis: live edge count was not observed on its checkpoint")
-    return out, n
 
 
 def _mis_local(

@@ -40,7 +40,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from parrsb_spark.functions.loop import spmv_loop
+from parrsb_spark.functions.loop import counted_checkpoint, spmv_loop
 from parrsb_spark.session import hard_truncate
 from parrsb_spark.sources.edges import vertices_from_edges
 
@@ -137,7 +137,7 @@ def strongly_connected_components(
         raise ValueError(f"scc: max_iter must be >= 1, got {max_iter}")
     spark = edges.sparkSession
     verts = (vertices or vertices_from_edges(edges)).select("vid")
-    active = hard_truncate(verts)
+    active, n_active, _ = counted_checkpoint(verts, hard=True)
     done: DataFrame | None = None
 
     def emit(piece: DataFrame) -> None:
@@ -161,13 +161,16 @@ def strongly_connected_components(
                     eact.select(F.col("src").alias("vid"))
                     .intersect(eact.select(F.col("dst").alias("vid")))
                 )
-                trivial = active.join(both, "vid", "left_anti")
-                n_trim = trivial.count()
+                trivial, n_trim, _ = counted_checkpoint(
+                    active.join(both, "vid", "left_anti"), hard=True
+                )
                 if n_trim == 0:
                     break
-                emit(hard_truncate(trivial.withColumn("scc", F.col("vid"))))
-                active = hard_truncate(active.join(trivial, "vid", "left_anti"))
-            if active.isEmpty():
+                emit(trivial.withColumn("scc", F.col("vid")))
+                active, n_active, _ = counted_checkpoint(
+                    active.join(trivial, "vid", "left_anti"), hard=True
+                )
+            if n_active == 0:
                 break
             # pin the post-trim edge set hash-partitioned on src and cached:
             # every forward-coloring iteration joins on src, so the edge-side
@@ -194,7 +197,9 @@ def strongly_connected_components(
             color = hard_truncate(color)
             it = 0
             while it < max_iter:
-                prev = color
+                # carry the burst's starting color as `_old`: the burst's
+                # checkpoint counts the labels that moved
+                color = color.select("vid", "color", F.col("color").alias("_old"))
                 for _ in range(min(chain, max_iter - it)):
                     nbr = (
                         eact.join(
@@ -204,15 +209,12 @@ def strongly_connected_components(
                         .agg(F.min("color").alias("nbr"))
                     )
                     color = color.join(nbr, "vid", "left").select(
-                        "vid", F.least("color", F.coalesce("nbr", "color")).alias("color")
+                        "vid", F.least("color", F.coalesce("nbr", "color")).alias("color"), "_old"
                     )
-                color = hard_truncate(color)
-                it += chain
-                changed = (
-                    color.join(prev.select("vid", F.col("color").alias("_old")), "vid")
-                    .filter(F.col("color") < F.col("_old"))
-                    .count()
+                color, _, changed = counted_checkpoint(
+                    color, hard=True, changed=F.col("color") < F.col("_old")
                 )
+                it += chain
                 if changed == 0:
                     break
             else:
@@ -229,7 +231,7 @@ def strongly_connected_components(
             # the converged color table is joined once per backward hop;
             # pin it hash-partitioned on vid so each hop pays only the
             # candidate-side exchange
-            color = lp.cache(color.repartition(lp.partitions, "vid"))
+            color = lp.cache(color.select("vid", "color").repartition(lp.partitions, "vid"))
             visited = hard_truncate(
                 color.filter(F.col("color") == F.col("vid")).select("vid", "color")
             )
@@ -247,22 +249,23 @@ def strongly_connected_components(
                     .select("vid", "color")
                     .join(visited, "vid", "left_anti")
                 )
-                preds = hard_truncate(preds)
-                if preds.isEmpty():
+                preds, n_preds, _ = counted_checkpoint(preds, hard=True)
+                if n_preds == 0:
                     break
                 visited = hard_truncate(visited.union(preds))
                 frontier = preds
             emit(visited.select("vid", F.col("color").alias("scc")))
-            active = hard_truncate(active.join(visited, "vid", "left_anti"))
+            active, n_active, _ = counted_checkpoint(
+                active.join(visited, "vid", "left_anti"), hard=True
+            )
             eact.unpersist()
             color.unpersist()
-            if active.isEmpty():
+            if n_active == 0:
                 break
         else:
-            remaining = active.count()
-            if remaining:
+            if n_active:
                 raise RuntimeError(
-                    f"scc: {remaining} vertices unresolved after {max_rounds} rounds"
+                    f"scc: {n_active} vertices unresolved after {max_rounds} rounds"
                 )
     if done is None:  # empty vertex set
         return verts.withColumn("scc", F.col("vid"))
@@ -286,7 +289,6 @@ def condensation_levels(
     SHRINKING condensation — orders smaller than the vertex set."""
     labels = scc if scc is not None else strongly_connected_components(edges)
     out: DataFrame | None = None
-    lvl = 0
     with spmv_loop(_simple_edges(edges), "src") as lp:
         labels = lp.cache(labels)
         ce = (
@@ -299,21 +301,22 @@ def condensation_levels(
             .distinct()
         )
         ce = hard_truncate(ce)
-        remaining = hard_truncate(
-            labels.select("scc").distinct().withColumnRenamed("scc", "node")
+        remaining, n_remaining, _ = counted_checkpoint(
+            labels.select("scc").distinct().withColumnRenamed("scc", "node"), hard=True
         )
-        while lvl < max_levels:
-            if remaining.isEmpty():
+        for lvl in range(max_levels):
+            if n_remaining == 0:
                 break
             dsts = ce.select(F.col("cdst").alias("node")).distinct()
             roots = hard_truncate(remaining.join(dsts, "node", "left_anti"))
             piece = roots.select(F.col("node").alias("scc"), F.lit(lvl).alias("level"))
             out = piece if out is None else out.union(piece)
-            remaining = hard_truncate(remaining.join(roots, "node", "left_anti"))
+            remaining, n_remaining, _ = counted_checkpoint(
+                remaining.join(roots, "node", "left_anti"), hard=True
+            )
             ce = hard_truncate(
                 ce.join(remaining.withColumnRenamed("node", "csrc"), "csrc", "left_semi")
             )
-            lvl += 1
         else:
             raise RuntimeError(f"condensation_levels: not a DAG within {max_levels} levels")
     levels = out if out is not None else labels.select("scc").distinct().withColumn(
@@ -342,23 +345,19 @@ def bowtie_classes(
         src, dst = ("src", "dst") if forward else ("dst", "src")
         visited = seed
         frontier = seed
-        it = 0
-        converged = False
-        while it < max_iter:
-            nxt = (
+        for _ in range(max_iter):
+            nxt, n_nxt, _ = counted_checkpoint(
                 e.join(frontier.withColumnRenamed("vid", src), src, "left_semi")
                 .select(F.col(dst).alias("vid"))
                 .distinct()
-                .join(visited, "vid", "left_anti")
+                .join(visited, "vid", "left_anti"),
+                hard=True,
             )
-            nxt = hard_truncate(nxt)
-            if nxt.isEmpty():
-                converged = True
+            if n_nxt == 0:
                 break
             visited = hard_truncate(visited.union(nxt))
             frontier = nxt
-            it += 1
-        if not converged:
+        else:
             # a silently truncated reachability set misclassifies IN/OUT
             # for paths longer than max_iter hops — same loud-failure
             # contract as the SCC coloring guard above

@@ -21,7 +21,7 @@ Scale design (same discipline as bfs.py):
   partial-aggregated inside every map task before the shuffle; no
   windows, no per-key funnels.
 - each round's improvement set is localCheckpointed eagerly; the
-  early-exit count rides that same materialization. The settled table
+  early-exit count is observed on that same job. The settled table
   is rewritten per round (anti-join + union) and checkpointed, so
   lineage stays flat at any depth.
 - early exit when no vertex improves: converged rounds are no-ops and
@@ -35,7 +35,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from parrsb_spark.functions.loop import spmv_loop
+from parrsb_spark.functions.loop import counted_checkpoint, spmv_loop
 
 _FLOATS = {"double", "float"}
 
@@ -74,13 +74,12 @@ def sssp(
                 .groupBy("vid")
                 .agg(F.min("nd").alias("nd"))
             )
-            improved = (
+            improved, n, _ = counted_checkpoint(
                 cand.join(dist, "vid", "left")
                 .filter(F.col("dist").isNull() | (F.col("nd") < F.col("dist")))
                 .select("vid", F.col("nd").alias("dist"))
-                .localCheckpoint(eager=True)
             )
-            if improved.count() == 0:
+            if n == 0:
                 break
             frontier = improved
             dist = (

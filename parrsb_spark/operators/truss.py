@@ -29,8 +29,8 @@ Scale design:
 - the survivor set only shrinks, so per-round cost is monotonically
   non-increasing; `localCheckpoint` each round truncates lineage
   (the iterative-kernel discipline shared by kcore/CC/SCC).
-- early exit on a fixed point — the survivor count is the same
-  action that materializes the checkpoint, no extra job.
+- early exit on a fixed point — the survivor count is observed on the
+  job that materializes the checkpoint, no extra job.
 """
 
 from __future__ import annotations
@@ -38,6 +38,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from parrsb_spark.functions.loop import counted_checkpoint
 from parrsb_spark.functions.spmv import symmetrize
 from parrsb_spark.operators.triangles import triangle_list
 
@@ -69,23 +70,17 @@ def truss(edges: DataFrame, k: int, max_rounds: int = 16) -> DataFrame:
     support is ≥ k−2 and exact within the output subgraph. k ≥ 3
     (k = 2 keeps every edge and the loop exits on round one)."""
     need = k - 2
-    alive = (
+    alive, n, _ = counted_checkpoint(
         symmetrize(edges)
         .filter(F.col("src") < F.col("dst"))
         .select(F.col("src").alias("u"), F.col("dst").alias("v"))
-        .localCheckpoint(eager=True)
     )
-    n = alive.count()
     for _ in range(max_rounds):
         if n == 0:
             break
-        alive = (
-            _edge_support(alive)
-            .filter(F.col("support") >= need)
-            .select("u", "v")
-            .localCheckpoint(eager=True)
+        alive, n2, _ = counted_checkpoint(
+            _edge_support(alive).filter(F.col("support") >= need).select("u", "v")
         )
-        n2 = alive.count()
         if n2 == n:
             break
         n = n2

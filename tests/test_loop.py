@@ -4,7 +4,8 @@ Every driver-loop kernel runs its loop inside `spmv_loop`, which owns
 the edge cache, the degree probe and the `iterative_conf` scope. These
 tests pin the driver's exit contract — the session conf comes back
 unchanged and nothing stays cached — on the failure path and for each
-kernel's normal return.
+kernel's normal return. `counted_checkpoint`, the driver's round
+count, must never read a missing count as "empty/converged".
 """
 
 from __future__ import annotations
@@ -14,7 +15,7 @@ from pyspark.sql import functions as F
 
 from parrsb_spark import graphs
 from parrsb_spark.config import EngineOptions
-from parrsb_spark.functions.loop import spmv_loop
+from parrsb_spark.functions.loop import counted_checkpoint, spmv_loop
 from parrsb_spark.functions.spmv import symmetrize
 from parrsb_spark.operators.anf import (
     anf_masks,
@@ -24,7 +25,7 @@ from parrsb_spark.operators.anf import (
 from parrsb_spark.operators.betweenness import betweenness, edge_betweenness
 from parrsb_spark.operators.bfs import bfs_distances
 from parrsb_spark.operators.coloring import greedy_coloring
-from parrsb_spark.operators.components import connected_components
+from parrsb_spark.operators.components import cc_bfs_single_seed, connected_components
 from parrsb_spark.operators.coreness import coreness
 from parrsb_spark.operators.fiedler import fiedler
 from parrsb_spark.operators.hits import hits
@@ -110,6 +111,7 @@ KERNELS = {
     "pagerank_converge": lambda e, s: pagerank(e, tol=1e-4, max_iter=4),
     "personalized_pagerank": lambda e, s: personalized_pagerank(e, _seeds(s), fixed_iters=3),
     "connected_components": lambda e, s: connected_components(e, max_iter=4),
+    "cc_bfs_single_seed": lambda e, s: cc_bfs_single_seed(e),
     "label_propagation": lambda e, s: label_propagation(e, n_iter=2),
     "hits": lambda e, s: hits(e, n_iter=2),
     "katz_centrality": lambda e, s: katz_centrality(e, rounds=3),
@@ -178,3 +180,31 @@ def test_scc_unconverged_restores_conf_and_releases_caches(spark):
         strongly_connected_components(cycle, max_iter=1)
     assert _conf(spark) == before
     assert _cache_empty(spark)
+
+
+def test_counted_checkpoint_missing_observation_raises(spark, monkeypatch):
+    """A row count that never comes back raises instead of reading as
+    an empty (converged) round."""
+    from pyspark.sql import Observation
+
+    class Unread(Observation):
+        @property
+        def get(self):
+            return {}
+
+    monkeypatch.setattr("parrsb_spark.functions.loop.Observation", Unread)
+    with pytest.raises(RuntimeError, match="not observed"):
+        counted_checkpoint(spark.range(5), changed=F.col("id") > 2)
+
+
+def test_counted_checkpoint_empty_frame(spark):
+    """An empty round reads n == 0 and changed == 0, never None."""
+    df = spark.range(10).withColumn("old", F.col("id") % 3)
+    for hard in (False, True):
+        out, n, changed = counted_checkpoint(df, hard=hard, changed=F.col("old") == 0)
+        assert (n, changed, out.count()) == (10, 4, 10)
+        out, n, changed = counted_checkpoint(
+            df.filter("id < 0"), hard=hard, changed=F.col("old") == 0
+        )
+        assert (n, changed, out.count()) == (0, 0, 0)
+        assert counted_checkpoint(df.filter("id < 0"), hard=hard)[1:] == (0, None)

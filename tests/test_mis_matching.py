@@ -181,14 +181,14 @@ def test_mis_local_tail_missing_count_raises(spark, monkeypatch):
 
     from pyspark.sql import Observation
 
-    mmod = importlib.import_module("parrsb_spark.operators.mis")
+    lmod = importlib.import_module("parrsb_spark.functions.loop")
 
     class Unread(Observation):
         @property
         def get(self):
             return {"n": None}
 
-    monkeypatch.setattr(mmod, "Observation", Unread)
+    monkeypatch.setattr(lmod, "Observation", Unread)
     e = spark.createDataFrame([(i, i + 1) for i in range(40)], "src long, dst long")
     with pytest.raises(RuntimeError, match="not observed"):
         mis(e, local_threshold=1).collect()

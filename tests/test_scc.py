@@ -98,6 +98,7 @@ def test_scc_entry_row_matches_tarjan_sf0001(spark):
     at sf0.001 against Tarjan — the CORRECTNESS row's pytest twin."""
     from parrsb_spark import entry_queries as EQ
 
+    spark.catalog.clearCache()
     e = EQ.scc_digraph_edges(spark, "/root/testdata/sf0.001")
     rows = [(r.src, r.dst) for r in e.collect()]
     verts = sorted({x for t in rows for x in t})
@@ -109,6 +110,8 @@ def test_scc_entry_row_matches_tarjan_sf0001(spark):
 
     sizes = Counter(Counter(got.values()).values())
     assert sum(sizes.values()) > 10 and max(Counter(got.values()).values()) >= 3
+    # neither the edge derivation nor the kernel leaves a cached frame
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
 
 
 def test_scc_one_coloring_round_plan_no_python_no_window(spark):
