@@ -27,6 +27,7 @@ from parrsb_spark.functions.hashing import (
     MOD_P,
     MOD_X,
 )
+from parrsb_spark.session import local_frame
 
 # Iterative float kernels (pagerank/ppr/hits) gate at round-8: their
 # per-vertex sums reduce in shuffle-arrival order on Spark and CTE-eval
@@ -1085,8 +1086,8 @@ def q_graph_nf_diameter(spark, sf_dir):
     while len(nf) < ANF_HOPS + 1:
         nf.append((len(nf), nf[-1][1]))
     d = effective_diameter(nf, q=0.9)
-    return spark.createDataFrame(
-        [(h, est, d) for h, est in nf], "h bigint, nf_est double, d_eff double"
+    return local_frame(
+        spark, [(h, est, d) for h, est in nf], "h bigint, nf_est double, d_eff double"
     ).select(
         "h",
         F.round("nf_est", 4).alias("nf_est"),
@@ -1571,9 +1572,10 @@ def q_graph_rsb_gate(spark, sf_dir):
     n = sum(sz.values())
     balanced = max(sz.values()) <= -(-n // k) and min(sz.values()) >= n // k
     gate = quality_gate(e, parts, k)
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         [(k, n, bool(balanced), bool(gate["ok"]))],
-        schema="k bigint, n bigint, balanced boolean, gate_ok boolean",
+        "k bigint, n bigint, balanced boolean, gate_ok boolean",
     )
 
 
@@ -1609,10 +1611,10 @@ def q_graph_rsb_two_level(spark, sf_dir):
     n = sum(sz)
     balanced = len(sz) == nodes * rpn and sz[-1] - sz[0] <= 1
     st = two_level_stats(e, two, rpn)
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         [(n, bool(balanced), bool(hier_ok), st["cut_internode"], st["cut_intranode"])],
-        schema="n bigint, balanced boolean, hier_ok boolean, "
-        "cut_internode bigint, cut_intranode bigint",
+        "n bigint, balanced boolean, hier_ok boolean, cut_internode bigint, cut_intranode bigint",
     )
 
 
@@ -1640,17 +1642,13 @@ def q_mesh_periodic(spark, sf_dir):
     from parrsb_spark.operators.periodic import match_periodic_faces
 
     nx, ny = 8, 5
-    faces = spark.createDataFrame(
-        graphs.grid2d_periodic_faces(nx, ny), schema=graphs.FACES_SCHEMA
-    )
+    faces = local_frame(spark, graphs.grid2d_periodic_faces(nx, ny), graphs.FACES_SCHEMA)
     pairs = match_periodic_faces(faces, nvf=2, ndim=2)  # strict: raises on misalign
     npairs = pairs.count()
     e = graphs.to_df(spark, graphs.grid2d(nx + 1, ny + 1)[0])
     _, mapping = contract_aliases(e, pairs)
     ncanon = mapping.select("canon").distinct().count()
-    return spark.createDataFrame(
-        [(npairs, ncanon)], schema="n_pairs bigint, n_canon bigint"
-    )
+    return local_frame(spark, [(npairs, ncanon)], "n_pairs bigint, n_canon bigint")
 
 
 def sql_mesh_periodic():

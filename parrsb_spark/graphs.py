@@ -11,6 +11,8 @@ import hashlib
 
 from pyspark.sql import DataFrame, SparkSession
 
+from parrsb_spark.session import local_frame
+
 
 def _h64(*parts: object) -> int:
     raw = ":".join(str(p) for p in parts).encode()
@@ -146,11 +148,9 @@ FACES_SCHEMA = (
 
 
 def to_df(spark: SparkSession, edges: list[tuple[int, int]]) -> DataFrame:
-    return spark.createDataFrame(
-        [(int(u), int(v)) for u, v in edges], schema="src bigint, dst bigint"
-    )
+    return local_frame(spark, [(int(u), int(v)) for u, v in edges], "src bigint, dst bigint")
 
 
 def coords_to_df(spark: SparkSession, coords: dict[int, tuple[float, ...]]) -> DataFrame:
     rows = [(int(v), float(c[0]), float(c[1]), float(c[2])) for v, c in sorted(coords.items())]
-    return spark.createDataFrame(rows, schema="vid bigint, x double, y double, z double")
+    return local_frame(spark, rows, "vid bigint, x double, y double, z double")

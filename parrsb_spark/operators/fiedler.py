@@ -41,6 +41,7 @@ from parrsb_spark.functions.ids import grouped_rank
 from parrsb_spark.functions.loop import spmv_loop
 from parrsb_spark.functions.spmv import symmetrize
 from parrsb_spark.session import hard_truncate as _hard_truncate
+from parrsb_spark.session import local_frame
 from parrsb_spark.sources.edges import vertices_from_edges
 
 _EPS = 1e-30
@@ -127,7 +128,7 @@ def _attach_group_scalars(
     schema = "grp long" + "".join(f", _sc_{k} double" for k in snames) + "".join(
         f", _sc_{k} array<double>" for k in anames
     )
-    sdf = F.broadcast(spark.createDataFrame(rows, schema=schema))
+    sdf = F.broadcast(local_frame(spark, rows, schema))
     out_cols = {k: F.col(f"_sc_{k}") for k in snames + anames}
     return df.join(sdf, "grp", how), out_cols
 
@@ -508,7 +509,7 @@ def _inverse_driver(spark, e, base, sizes, opts, state0) -> DataFrame:
             )
             for i, val in enumerate(f_np):
                 out_rows.append((g, i + 1, float(val)))
-        f_small = spark.createDataFrame(out_rows, schema="grp long, r long, z double")
+        f_small = local_frame(spark, out_rows, "grp long, r long, z double")
         return (
             f_small.join(ridmap, ["grp", "r"])
             .select("vid", "grp", F.col("z").alias("fiedler"))

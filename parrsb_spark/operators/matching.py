@@ -49,6 +49,7 @@ from pyspark.sql import functions as F
 
 from parrsb_spark.functions.loop import counted_checkpoint, key_degrees, spmv_loop
 from parrsb_spark.functions.spmv import symmetrize
+from parrsb_spark.session import local_frame
 from parrsb_spark.operators.mis import KNUTH_MULT, PRIO_MOD
 
 EDGE_MULT2 = 40503  # odd 16-bit scrambler for the second endpoint
@@ -124,7 +125,5 @@ def maximal_matching(
                 .join(mvert.withColumnRenamed("vid", "v"), "v", "left_anti")
             )
     if matched is None:
-        return (
-            edges.sparkSession.createDataFrame([], "u bigint, v bigint, round int")
-        )
+        return local_frame(edges.sparkSession, [], "u bigint, v bigint, round int")
     return matched.select("u", "v", "round")

@@ -42,6 +42,7 @@ from pyspark.sql import functions as F
 
 from parrsb_spark.functions.loop import counted_checkpoint, spmv_loop
 from parrsb_spark.functions.spmv import symmetrize
+from parrsb_spark.session import local_frame
 from parrsb_spark.sources.edges import vertices_from_edges
 
 #: Knuth's multiplicative constant (2^32 / phi, odd -> bijective mod 2^32).
@@ -107,13 +108,9 @@ def mis(
                     max_rounds=max_rounds,
                 )
                 if batch_rows:
-                    tail = spark.createDataFrame(
-                        batch_rows, schema="vid long, in_mis int, round int"
-                    )
+                    tail = local_frame(spark, batch_rows, "vid long, in_mis int, round int")
                     decided = tail if decided is None else decided.unionAll(tail)
-                und = spark.createDataFrame(
-                    left_rows, schema="vid long, p bigint"
-                ) if left_rows else und.limit(0)
+                und = local_frame(spark, left_rows, "vid long, p bigint") if left_rows else und.limit(0)
                 break
             # strict local minimum of struct(p, vid) wins; vertices with
             # no undecided neighbour win unconditionally (mn is null)

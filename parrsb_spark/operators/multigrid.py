@@ -31,6 +31,8 @@ import numpy as np
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from parrsb_spark.session import local_frame
+
 NPRES = 3  # pre-smoothing steps (ref multigrid.c:211 npres=3)
 OVER = 1.33333  # prolongation over-relaxation (ref multigrid.c:213)
 
@@ -348,10 +350,7 @@ def mg_vcycle(h: MGHierarchy, r_df: DataFrame) -> DataFrame:
         e = _np_vcycle(levels_np, rhs)
         for i, val in enumerate(e):
             corr_rows.append((g, i + 1, float(val)))
-    if corr_rows:
-        e_df = spark.createDataFrame(corr_rows, schema="grp long, r long, e double")
-    else:
-        e_df = spark.createDataFrame([], schema="grp long, r long, e double")
+    e_df = local_frame(spark, corr_rows, "grp long, r long, e double")
 
     # up sweep through the distributed levels: e_fine = over·J e_coarse + u
     for st_u in reversed(saved):

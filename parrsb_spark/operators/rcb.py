@@ -21,6 +21,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from parrsb_spark.functions.ids import grouped_rank
+from parrsb_spark.session import local_frame
 
 AXES = ["x", "y", "z"]
 
@@ -46,7 +47,7 @@ def axis_order(state: DataFrame, active: list, dims: int = 3) -> DataFrame:
             continue
         lens = [(r[f"max_{a}"] or 0.0) - (r[f"min_{a}"] or 0.0) for a in axes]
         axis_rows.append((g, axes[lens.index(max(lens))]))
-    axis_df = F.broadcast(spark.createDataFrame(axis_rows, schema="part long, axis string"))
+    axis_df = F.broadcast(local_frame(spark, axis_rows, "part long, axis string"))
     val = F.when(F.col("axis") == "x", F.col("x")).when(F.col("axis") == "y", F.col("y"))
     if dims > 2:
         val = val.otherwise(F.col("z"))
@@ -80,7 +81,7 @@ def _halve_groups(state: DataFrame, np_of: dict[int, int], order_col: str) -> tu
     for g, npg in np_of.items():
         if npg <= 1:
             new_np[g * 2] = npg
-    splits = F.broadcast(spark.createDataFrame(split_rows, schema="part long, target0 long"))
+    splits = F.broadcast(local_frame(spark, split_rows, "part long, target0 long"))
     act = (
         grouped_rank(state.filter(F.col("part").isin(active)), "part", [order_col, "vid"], "rn")
         .join(splits, "part")
@@ -107,6 +108,6 @@ def rcb_partition(coords: DataFrame, k: int, dims: int = 3) -> DataFrame:
         state = state.drop("_ord").localCheckpoint(eager=True)
     leaves = sorted(np_of)
     remap = F.broadcast(
-        spark.createDataFrame([(g, i) for i, g in enumerate(leaves)], schema="part long, dense long")
+        local_frame(spark, [(g, i) for i, g in enumerate(leaves)], "part long, dense long")
     )
     return state.join(remap, "part").select("vid", F.col("dense").alias("part"))

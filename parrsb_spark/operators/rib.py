@@ -20,6 +20,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from parrsb_spark.operators.rcb import _halve_groups
+from parrsb_spark.session import local_frame
 
 
 def inertial_order(state: DataFrame, active: list) -> DataFrame:
@@ -68,8 +69,8 @@ def inertial_order(state: DataFrame, active: list) -> DataFrame:
         rows.append((g, float(c[0]), float(c[1]), float(c[2]),
                      float(a[0]), float(a[1]), float(a[2])))
     ax = F.broadcast(
-        spark.createDataFrame(
-            rows, schema="part long, cx double, cy double, cz double, ax double, ay double, az double"
+        local_frame(
+            spark, rows, "part long, cx double, cy double, cz double, ax double, ay double, az double"
         )
     )
     return state.join(ax, "part", "left").withColumn(
@@ -95,6 +96,6 @@ def rib_partition(coords: DataFrame, k: int, dims: int = 3) -> DataFrame:
         state = state.drop("_ord").localCheckpoint(eager=True)
     leaves = sorted(np_of)
     remap = F.broadcast(
-        spark.createDataFrame([(g, i) for i, g in enumerate(leaves)], schema="part long, dense long")
+        local_frame(spark, [(g, i) for i, g in enumerate(leaves)], "part long, dense long")
     )
     return state.join(remap, "part").select("vid", F.col("dense").alias("part"))

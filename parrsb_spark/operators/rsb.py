@@ -34,6 +34,7 @@ from parrsb_spark.config import EngineOptions, default_options
 from parrsb_spark.functions.ids import grouped_rank
 from parrsb_spark.operators.components import connected_components
 from parrsb_spark.operators.fiedler import fiedler
+from parrsb_spark.session import local_frame
 from parrsb_spark.sources.edges import vertices_from_edges
 
 
@@ -169,10 +170,14 @@ def rsb_partition(
             split_rows.append((g, target0))
             new_np[g * 2] = n0
             new_np[g * 2 + 1] = npg - n0
-        splits = F.broadcast(
-            spark.createDataFrame(split_rows, schema="grp long, target0 long")
+        splits = F.broadcast(local_frame(spark, split_rows, "grp long, target0 long"))
+        # materialized once: the tie-break probe collect and the state
+        # write below both read it
+        ranked = (
+            grouped_rank(fied, "grp", ["fiedler", "vid"], "rn")
+            .join(splits, "grp")
+            .localCheckpoint(eager=True)
         )
-        ranked = grouped_rank(fied, "grp", ["fiedler", "vid"], "rn").join(splits, "grp")
         assigned = ranked.select(
             "vid",
             "grp",
@@ -216,10 +221,10 @@ def rsb_partition(
             with ph(lineage_tag, "components", cut):
                 _component_check(edges, state, cut)
         if lineage is not None:
-            lineage.record_many(
+            # the per-group size rows ride the cut's one phase append
+            lineage.flush_phases(
                 [(lineage_tag, cut, int(g), None, int(n_g)) for g, n_g in sizes.items()]
             )
-            lineage.flush_phases()
         cut += 1
         if max_cuts is not None and cut >= max_cuts and any(v > 1 for v in np_of.values()):
             return state.select("vid", "part")
@@ -227,9 +232,7 @@ def rsb_partition(
     # leaves → dense 0..k-1 (order-preserving)
     leaves = sorted(np_of)
     remap = F.broadcast(
-        spark.createDataFrame(
-            [(g, i) for i, g in enumerate(leaves)], schema="part long, dense long"
-        )
+        local_frame(spark, [(g, i) for i, g in enumerate(leaves)], "part long, dense long")
     )
     return state.join(remap, "part").select("vid", F.col("dense").alias("part"))
 

@@ -41,7 +41,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from parrsb_spark.functions.loop import counted_checkpoint, spmv_loop
-from parrsb_spark.session import hard_truncate
+from parrsb_spark.session import hard_truncate, local_frame
 from parrsb_spark.sources.edges import vertices_from_edges
 
 
@@ -184,9 +184,7 @@ def strongly_connected_components(
                     [(r[0], r[1]) for r in eact.collect()],
                     [(r[0],) for r in active.collect()],
                 )
-                emit(
-                    spark.createDataFrame(pairs, schema="vid long, scc long")
-                )
+                emit(local_frame(spark, pairs, "vid long, scc long"))
                 # vertices of the residue with no surviving edge are
                 # already trimmed above, so `pairs` covers all of active
                 eact.unpersist()

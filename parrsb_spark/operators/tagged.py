@@ -25,6 +25,7 @@ from pyspark.sql import functions as F
 from parrsb_spark.config import EngineOptions, default_options
 from parrsb_spark.functions.ids import dense_ids_scalable
 from parrsb_spark.functions.spmv import symmetrize
+from parrsb_spark.session import local_frame
 
 
 def rsb_partition_tagged(
@@ -41,8 +42,9 @@ def rsb_partition_tagged(
     spark = edges.sparkSession
     dense = tags.select("tag").distinct().orderBy("tag").collect()
     tag_idx = {r["tag"]: i for i, r in enumerate(dense)}
+    tag_type = tags.schema["tag"].dataType.simpleString()
     mapping = F.broadcast(
-        spark.createDataFrame([(t, i) for t, i in tag_idx.items()], ["tag", "tidx"])
+        local_frame(spark, list(tag_idx.items()), f"tag {tag_type}, tidx long")
     )
     seed = tags.join(mapping, "tag").select("vid", F.col("tidx").alias("part"))
     # Every tag rides the SAME grouped-Lanczos loop concurrently: the seed
@@ -140,7 +142,7 @@ def assign_solid_to_parts(
         # be arbitrarily large at scale (the per-vid vote window above is
         # fine — its groups are single-vertex vote lists).
         cap_rows = [(p, max(quota - taken.get(p, 0), 0)) for p in taken]
-        caps = F.broadcast(spark.createDataFrame(cap_rows, ["part", "cap"]))
+        caps = F.broadcast(local_frame(spark, cap_rows, "part long, cap long"))
         from parrsb_spark.functions.ids import grouped_rank
 
         accepted = (

@@ -12,6 +12,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from parrsb_spark.functions.hashing import MOD_P, md5_long_col
+from parrsb_spark.session import local_frame
 
 # tiny per-language stopword lists (matching the documents langs)
 STOPWORDS = {
@@ -42,7 +43,7 @@ def token_count(docs: DataFrame) -> DataFrame:
 
 def stopword_table(spark) -> DataFrame:
     rows = [(lang, w) for lang, ws in STOPWORDS.items() for w in ws]
-    return spark.createDataFrame(rows, schema="sw_lang string, word string")
+    return local_frame(spark, rows, "sw_lang string, word string")
 
 
 def lang_id(docs: DataFrame) -> DataFrame:

@@ -24,8 +24,12 @@ Phase rows (the metric_rsb_print analogue, ref
 /root/reference/src/metrics.c:68-106) reuse the same schema with
 kernel = "<kernel>/<phase>" and wall_s = the phase DURATION (not the
 run offset ordinary rows carry); `iteration` is the RSB level. They are
-buffered driver-side and flushed as ONE parquet append per cut — a
-write job per phase row would itself distort the timings it records.
+buffered driver-side and flushed, together with the cut's per-group size
+rows, as ONE parquet append per cut — a write job per phase row would
+itself distort the timings it records.
+
+Every append is one parquet file built from a JVM-local frame
+(`session.local_frame`): no Python worker runs behind a lineage write.
 """
 
 from __future__ import annotations
@@ -36,6 +40,8 @@ import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from parrsb_spark.session import local_frame
 
 LINEAGE_SCHEMA = (
     "run_id string, kernel string, partition_id int, iteration int, "
@@ -76,10 +82,11 @@ class LineageLog:
         sequential jobs and 512 files per cut the batch form collapses
         to one. Durability ordering (write-state-then-log) is preserved:
         the whole batch lands atomically after the state it describes."""
-        if not entries:
-            return
+        self._append(self._entry_rows(entries))
+
+    def _entry_rows(self, entries) -> list[tuple]:
         t = time.monotonic() - self._t0
-        rows = [
+        return [
             (
                 self.run_id,
                 kernel,
@@ -91,9 +98,12 @@ class LineageLog:
             )
             for kernel, iteration, partition_id, residual, nrows in entries
         ]
-        self.spark.createDataFrame(rows, schema=LINEAGE_SCHEMA).write.mode("append").parquet(
-            self.lineage_path
-        )
+
+    def _append(self, rows: list[tuple]) -> None:
+        if rows:
+            local_frame(self.spark, rows, LINEAGE_SCHEMA).coalesce(1).write.mode(
+                "append"
+            ).parquet(self.lineage_path)
 
     @contextlib.contextmanager
     def phase(self, kernel: str, name: str, iteration: int = 0):
@@ -131,14 +141,12 @@ class LineageLog:
             )
         )
 
-    def flush_phases(self) -> None:
-        """ONE append job for every buffered phase row."""
-        if not self._phase_buf:
-            return
-        buf, self._phase_buf = self._phase_buf, []
-        self.spark.createDataFrame(buf, schema=LINEAGE_SCHEMA).write.mode("append").parquet(
-            self.lineage_path
-        )
+    def flush_phases(self, entries=()) -> None:
+        """ONE append job for the `record_many`-style `entries` (written
+        first, stamped now) and every buffered phase row."""
+        rows = self._entry_rows(entries) + self._phase_buf
+        self._phase_buf = []
+        self._append(rows)
 
     def read(self) -> DataFrame:
         return self.spark.read.parquet(self.lineage_path)
@@ -227,12 +235,20 @@ def latest_checkpoint(
     spark: SparkSession, base_dir: str, kernel: str
 ) -> tuple[int, DataFrame] | None:
     """(iteration, state) of the newest snapshot that has lineage rows, or
-    None. The resume entry point: kernels continue from iteration+1."""
+    None. The resume entry point: kernels continue from iteration+1.
+
+    A lineage dir that does not exist or holds no committed file (names
+    starting with `_` or `.` are Spark's own bookkeeping) means no
+    checkpoint; one that exists but cannot be read raises rather than
+    silently restarting the run from iteration 0."""
     base_dir = base_dir.rstrip("/")
-    try:
-        lin = spark.read.parquet(f"{base_dir}/lineage")
-    except Exception:
+    jpath = spark._jvm.org.apache.hadoop.fs.Path(f"{base_dir}/lineage")
+    fs = jpath.getFileSystem(spark._jsc.hadoopConfiguration())
+    if not fs.exists(jpath) or not any(
+        not st.getPath().getName().startswith(("_", ".")) for st in fs.listStatus(jpath)
+    ):
         return None
+    lin = spark.read.parquet(f"{base_dir}/lineage")
     rows = (
         lin.filter(F.col("kernel") == kernel)
         .agg(F.max("iteration").alias("m"))

@@ -5,8 +5,11 @@ Design notes for scale (the 1000-executor / 100 TB target):
   what replaces the reference's hand-rolled histogram/hypercube range
   partitioning (ref /root/reference/src/sort-bin.c, src/sort-hypercube.c).
   Driver-loop kernels scope their own conf (functions/loop.py).
-- Arrow on: every Python-side kernel is an Arrow-batched pandas UDF; no
-  row-at-a-time Python anywhere.
+- Arrow on: every Python-side kernel is an Arrow-batched pandas UDF.
+  Frames built from driver-side Python rows (split targets, part
+  remaps, lineage appends, test fixtures) go through `local_frame`, an
+  Arrow table parallelized in the JVM: no Python worker ever unpickles
+  them row by row.
 - UTC session TZ pinned so results compare bit-stably against the
   DuckDB oracle.
 """
@@ -15,7 +18,8 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 
 def _driver_memory() -> str:
@@ -144,3 +148,37 @@ def hard_truncate(df, eager: bool = True):
         return _CDF(jdf2, spark)
     except (ImportError, AttributeError):
         return df.localCheckpoint(eager=eager)
+
+
+def local_frame(spark: SparkSession, rows, schema: str | StructType) -> DataFrame:
+    """A DataFrame over driver-side Python rows (tuples, lists or Rows)
+    whose lineage stays in the JVM; the one way the engine builds a frame
+    from Python rows.
+
+    `spark.createDataFrame(list, schema)` pickles the rows into a
+    PythonRDD, so every action that reads the frame starts Python worker
+    tasks (a 3-row frame in a warm local[4] session: collect 306 ms vs
+    16 ms here, parquet append 353 vs 90 ms). Here the rows are
+    column-built into a `pyarrow.Table` against `schema` (DDL string or
+    StructType); createDataFrame turns that into a local relation that
+    the JVM parallelizes itself.
+
+    Every row is first checked with the verifier createDataFrame uses, so
+    a value that does not fit its declared type raises `PySparkTypeError`
+    / `PySparkValueError` as it would there (Arrow alone truncates 1.5
+    into a bigint 1)."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_type
+    from pyspark.sql.types import _make_type_verifier, _parse_datatype_string
+
+    struct = schema if isinstance(schema, StructType) else _parse_datatype_string(schema)
+    rows = list(rows)
+    verify = _make_type_verifier(struct)
+    for r in rows:
+        verify(r)
+    cols = list(zip(*rows)) if rows else [()] * len(struct.fields)
+    table = pa.Table.from_arrays(
+        [pa.array(c, type=to_arrow_type(f.dataType)) for c, f in zip(cols, struct.fields)],
+        names=struct.names,
+    )
+    return spark.createDataFrame(table, schema=struct)
